@@ -1,4 +1,4 @@
-"""Checkpoint strategy helper.
+"""Checkpoint strategy and maintained-state read helpers.
 
 ``localCheckpoint(eager=True)`` is the engine's default way to pin a
 materialized frame into the plan (truncating lineage and surviving
@@ -16,6 +16,10 @@ DFS path, exactly the GraphX/Pregel discipline), and falls back to
 checkpoint files would only add I/O). Cluster runbooks should set the
 dir; everything that pins frames then becomes executor-loss-safe with
 no code change.
+
+``read_pinned`` reads a maintainer's or SCD2 table's committed parquet
+dirs with the schema the owner wrote them with, so building a state
+read launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -35,3 +39,18 @@ def pinned_checkpoint(df: DataFrame) -> DataFrame:
     if has_dir:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def read_pinned(spark, paths: list[str], schemas: dict, key: str) -> DataFrame:
+    """Read maintained-state parquet dirs with the schema they were
+    written with. ``schemas`` is the owner's per-relation schema memo:
+    a known schema skips the one-task footer-inference job (and its
+    scheduling round-trip) every bare ``spark.read.parquet`` pays; an
+    unknown one (an owner just reopened from its pointer) is inferred
+    once and remembered."""
+    schema = schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    schemas[key] = df.schema
+    return df

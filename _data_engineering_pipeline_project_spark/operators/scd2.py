@@ -9,12 +9,26 @@ with ``updated_at=now()``; for deleted rows copy to history with
 transaction per changed row (etl2:354-412) and swallows duplicate-history
 inserts via IntegrityError (etl2:364-368).
 
-The engine replaces all of that with one ``snapshot_diff`` full-outer join
-per batch + two set-level writes (snapshot overwrite, history append):
-per-batch cost is one shuffle however many rows changed — the write
-pattern that survives a 1000-executor cluster. The IntegrityError-swallow
-becomes an explicit dedup of the history append on its PK
-(pk + valid_from + valid_to).
+The engine replaces all of that with ONE null-safe full-outer join of
+the incoming snapshot against the whole existing table (tombstones
+included) + two set-level writes (snapshot overwrite, history append).
+Each joined row carries the new attributes, the old row's attributes,
+``updated_at`` and ``is_deleted``, and one ``change_type``:
+
+- ``insert``: key absent from the table, or a tombstoned key the source
+  brings back (the reference re-inserts it);
+- ``update``: live key whose compared columns differ (null-safe);
+- ``delete``: live key absent from the source;
+- ``unchanged``: live key, nothing differs;
+- ``tombstone``: soft-deleted key still absent from the source.
+
+The classified frame is cached once; the next snapshot (one row per
+joined row) and the history delta (the OLD versions of updated and
+deleted rows) are projections of it, so the existing table is scanned
+once and no branch joins back to it. Per-batch cost is one shuffle
+however many rows changed — the write pattern that survives a
+1000-executor cluster. The IntegrityError-swallow becomes an explicit
+dedup of the history append on its PK (pk + valid_from + valid_to).
 
 ``batch_ts`` parameterizes the reference's ``datetime.now()`` (etl2:359,
 377) so merges are deterministic and replayable (event-time, not
@@ -29,18 +43,23 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from _data_engineering_pipeline_project_spark.operators.joins import snapshot_diff
+from _data_engineering_pipeline_project_spark.functions.expressions import row_differs
+from _data_engineering_pipeline_project_spark.functions.persist import read_pinned
+
+# bookkeeping columns the merge owns; a source that already declares them
+# (registry structs of sellers and products) never shadows them
+_BOOKKEEPING = ("updated_at", "is_deleted")
 
 
 @dataclass
 class Scd2Result:
     snapshot: DataFrame  # new current-state table (incl. soft-deleted rows)
     history: DataFrame  # rows to APPEND to the history table
-    stats: DataFrame  # (change_type, n) audit aggregate
-    _diff: DataFrame | None = None  # cached classifier plan (release())
+    stats: DataFrame  # (change_type, n) audit aggregate, tombstones excluded
+    _diff: DataFrame | None = None  # cached classified join (release())
 
     def release(self) -> None:
-        """Unpersist the cached diff once snapshot+history are written —
+        """Unpersist the cached join once snapshot+history are written —
         long-running micro-batch loops would otherwise accumulate cached
         partitions across batches."""
         if self._diff is not None:
@@ -57,11 +76,12 @@ def scd2_merge(
     """Merge one source snapshot into the current state.
 
     ``existing`` carries the SCD2 bookkeeping columns ``updated_at`` and
-    ``is_deleted``; ``incoming`` is the raw source snapshot without them.
-    Returns the full next snapshot (overwrite) and the history delta
-    (append) — both lazy.
+    ``is_deleted``; ``incoming`` is the raw source snapshot (bookkeeping
+    columns it carries are dropped). Returns the full next snapshot
+    (overwrite) and the history delta (append) — both lazy.
     """
     ts = F.lit(batch_ts).cast("timestamp")
+    incoming = incoming.drop(*_BOOKKEEPING)
     attrs = [c for c in incoming.columns if c not in pk]
 
     if existing is None or not existing.columns:
@@ -80,71 +100,88 @@ def scd2_merge(
         )
         return Scd2Result(snapshot, empty_hist, stats)
 
-    live = existing.filter(~F.col("is_deleted"))
-    diff = snapshot_diff(incoming, live.drop("updated_at", "is_deleted"), pk, compare_cols)
-    diff = diff.cache()  # reused by snapshot, history, stats — one shuffle total
+    ex_cols = set(existing.columns)
+    if compare_cols is None:
+        compare_cols = [c for c in attrs if c in ex_cols]
+    inc = incoming.withColumn("__in", F.lit(True)).alias("i")
+    ex = existing.select(
+        *pk,
+        *[c for c in attrs if c in ex_cols],
+        *_BOOKKEEPING,
+        F.lit(True).alias("__ex"),
+    ).alias("e")
+    joined = inc.join(
+        ex, [F.col(f"i.{k}").eqNullSafe(F.col(f"e.{k}")) for k in pk], "full_outer"
+    )
+    in_src = F.col("i.__in").isNotNull()
+    in_tbl = F.col("e.__ex").isNotNull()
+    dead = F.col("e.is_deleted")
+    change = (
+        F.when(~in_tbl | (in_src & dead), F.lit("insert"))
+        .when(~in_src & dead, F.lit("tombstone"))
+        .when(~in_src, F.lit("delete"))
+        .when(
+            row_differs("i", "e", compare_cols) if compare_cols else F.lit(False),
+            F.lit("update"),
+        )
+        .otherwise(F.lit("unchanged"))
+    )
 
-    ex = existing.alias("ex")
+    def old(c: str):
+        # a column the source added since the last merge has no old value
+        if c in ex_cols:
+            return F.col(f"e.{c}")
+        return F.lit(None).cast(incoming.schema[c].dataType)
 
-    # --- next snapshot -----------------------------------------------------
-    changed_or_new = diff.filter(F.col("change_type").isin("insert", "update")).select(
-        *pk, *attrs, ts.alias("updated_at"), F.lit(False).alias("is_deleted")
-    )
-    deleted = (
-        diff.filter(F.col("change_type") == "delete")
-        .select(*pk)
-        .join(ex, on=pk, how="inner")
-        .select(*pk, *attrs, ts.alias("updated_at"), F.lit(True).alias("is_deleted"))
-    )
-    unchanged = (
-        diff.filter(F.col("change_type") == "unchanged")
-        .select(*pk)
-        .join(ex, on=pk, how="inner")
-        .select(*pk, *attrs, "updated_at", "is_deleted")
-    )
-    # rows already soft-deleted and still absent from the source stay as-is;
-    # a reappearing key is classified 'insert' (reference re-inserts it) and
-    # must win over the old tombstone.
-    tombstones = (
-        existing.filter(F.col("is_deleted"))
-        .join(incoming.select(*pk).dropDuplicates(), on=pk, how="left_anti")
-        .select(*pk, *attrs, "updated_at", "is_deleted")
-    )
-    snapshot = changed_or_new.unionByName(deleted).unionByName(unchanged).unionByName(
-        tombstones
+    diff = joined.select(
+        *[F.coalesce(F.col(f"i.{k}"), F.col(f"e.{k}")).alias(k) for k in pk],
+        *[F.col(f"i.{c}").alias(c) for c in attrs],
+        *[old(c).alias(f"__old_{c}") for c in attrs],
+        F.col("e.updated_at").alias("__old_updated_at"),
+        dead.alias("__old_is_deleted"),
+        change.alias("change_type"),
+    ).cache()  # one scan of existing; snapshot, history, stats project it
+
+    ct = F.col("change_type")
+    kept = ct.isin("unchanged", "tombstone")
+
+    # --- next snapshot: one row per joined row --------------------------
+    def new_value(c: str):
+        return (
+            F.when(ct == "insert", F.col(c))
+            .when(ct == "update", F.coalesce(F.col(c), F.col(f"__old_{c}")))
+            .otherwise(F.col(f"__old_{c}"))
+            .alias(c)
+        )
+
+    snapshot = diff.select(
+        *pk,
+        *[new_value(c) for c in attrs],
+        F.when(kept, F.col("__old_updated_at")).otherwise(ts).alias("updated_at"),
+        F.when(kept, F.col("__old_is_deleted"))
+        .otherwise(ct == "delete")
+        .alias("is_deleted"),
     )
 
     # --- history delta (OLD versions of updated rows; deleted rows) --------
-    hist_updates = (
-        diff.filter(F.col("change_type") == "update")
-        .select(*pk)
-        .join(ex, on=pk, how="inner")
-        .select(
-            *pk,
-            *attrs,
-            F.col("is_deleted"),
-            F.col("updated_at").alias("valid_from"),
-            ts.alias("valid_to"),
-        )
-    )
-    hist_deletes = (
-        diff.filter(F.col("change_type") == "delete")
-        .select(*pk)
-        .join(ex, on=pk, how="inner")
-        .select(
-            *pk,
-            *attrs,
-            F.lit(True).alias("is_deleted"),
-            F.col("updated_at").alias("valid_from"),
-            ts.alias("valid_to"),
-        )
-    )
     # dedup on history PK replaces the reference's IntegrityError swallow
-    history = hist_updates.unionByName(hist_deletes).dropDuplicates(
-        [*pk, "valid_from", "valid_to"]
+    history = (
+        diff.filter(ct.isin("update", "delete"))
+        .select(
+            *pk,
+            *[F.col(f"__old_{c}").alias(c) for c in attrs],
+            (ct == "delete").alias("is_deleted"),
+            F.col("__old_updated_at").alias("valid_from"),
+            ts.alias("valid_to"),
+        )
+        .dropDuplicates([*pk, "valid_from", "valid_to"])
     )
 
-    stats = diff.groupBy("change_type").agg(F.count(F.lit(1)).alias("n"))
+    stats = (
+        diff.filter(ct != "tombstone")
+        .groupBy("change_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     return Scd2Result(snapshot, history, stats, _diff=diff)
 
 
@@ -169,6 +206,15 @@ class Scd2Table:
     for the highest ``snapshot_v*`` directory bearing Spark's ``_SUCCESS``
     marker), so a cron-style "one driver invocation per cycle" deployment
     restarts safely instead of silently re-initial-loading.
+
+    A merge is ONE full-outer join of the batch against the committed
+    snapshot (tombstones included), cached once; the next snapshot and
+    the history delta are projections of it — no branch re-joins the
+    existing table (see :func:`scd2_merge` for the ``change_type``
+    classes). Reads of committed dirs carry the schema the instance wrote
+    them with, so ``current()`` and ``history()`` build without a
+    footer-inference job; a reopened instance infers each schema once,
+    and a table with a legacy ``history`` dir keeps inferring.
     """
 
     _POINTER = "_CURRENT"
@@ -186,6 +232,7 @@ class Scd2Table:
         # compatibility: history() unions it in when present
         self.legacy_history_dir = os.path.join(base_dir, "history")
         self._version, self._history_base = self._recover_version()
+        self._schemas: dict = {}  # "snapshot"/"history" → written schema
 
     # --- commit protocol ---------------------------------------------------
 
@@ -280,7 +327,7 @@ class Scd2Table:
         path = f"{self.snapshot_dir}_v{self._version}"
         if not os.path.exists(path):
             return None
-        return self.spark.read.parquet(path)
+        return read_pinned(self.spark, [path], self._schemas, "snapshot")
 
     def merge(self, incoming: DataFrame, batch_ts: datetime) -> DataFrame:
         res = scd2_merge(incoming, self.current(), self.pk, batch_ts)
@@ -294,6 +341,9 @@ class Scd2Table:
         stats = res.stats.collect()  # materialize BEFORE commit
         self._commit(nxt)  # the atomic point: readers now see version nxt
         self._version = nxt
+        self._schemas.update(
+            snapshot=res.snapshot.schema, history=res.history.schema
+        )
         res.release()
         return self.spark.createDataFrame(stats, res.stats.schema)
 
@@ -340,7 +390,10 @@ class Scd2Table:
         )
         if not paths:
             raise FileNotFoundError("table has no committed history yet")
-        return self.spark.read.parquet(*paths)
+        if os.path.isdir(self.legacy_history_dir):
+            # the pre-pointer dir's layout is not one this instance wrote
+            return self.spark.read.parquet(*paths)
+        return read_pinned(self.spark, paths, self._schemas, "history")
 
     def snapshot_as_of(self, version: int) -> DataFrame:
         """Time travel: read an earlier snapshot version (versions are
@@ -634,9 +687,9 @@ def vacuum_versions(table: "Scd2Table", keep_last: int = 2) -> list[str]:
             src.insert(0, old_base)
         if src:
             new_base = f"{table.history_base_dir}_v{cut}"
-            table.spark.read.parquet(*src).write.mode("overwrite").parquet(
-                new_base
-            )
+            read_pinned(table.spark, src, table._schemas, "history").write.mode(
+                "overwrite"
+            ).parquet(new_base)
             table._commit(table.version, history_base=cut)
             table._history_base = cut
             for path in src:  # superseded: folded into the new base

@@ -73,6 +73,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from _data_engineering_pipeline_project_spark.functions.persist import read_pinned
+
 
 class ClusterMaintainer:
     """Maintain connected-component labels over a stream of near-dup
@@ -95,6 +97,9 @@ class ClusterMaintainer:
         os.makedirs(base_dir, exist_ok=True)
         self._checkpoint_token: str | None = None
         self._meta = self._recover()
+        # written schema per relation (members/aliases): state reads skip
+        # footer inference; a reopened instance infers each once
+        self._schemas: dict = {}
 
     # --- pointer protocol (house pattern) ---------------------------------
 
@@ -201,15 +206,18 @@ class ClusterMaintainer:
         paths = self._member_paths()
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return read_pinned(self.spark, paths, self._schemas, "members")
 
     def aliases(self) -> DataFrame | None:
         """(old_root, new_root) — flat re-rooting map; None when empty."""
         v = int(self._meta.get("aliases_v", 0))
         if v == 0:
             return None
-        return self.spark.read.parquet(
-            os.path.join(self.base_dir, f"aliases_v{v}")
+        return read_pinned(
+            self.spark,
+            [os.path.join(self.base_dir, f"aliases_v{v}")],
+            self._schemas,
+            "aliases",
         )
 
     def clusters(self) -> DataFrame:
@@ -456,6 +464,10 @@ class ClusterMaintainer:
                 "aliases_v": aliases_v,
             }
         )
+        if n_new > 0:
+            self._schemas["members"] = new_members_rows.schema
+        if aliases_v != int(meta.get("aliases_v", 0)):
+            self._schemas["aliases"] = folded.schema
         new_members_rows.unpersist()
         if known is not None:
             known.unpersist()
@@ -545,18 +557,20 @@ class ClusterMaintainer:
         # writes + pointer commit: same dirs, same schemas, same gates
         # as the distributed path (idempotent pre-pointer dirs, pointer
         # strictly last)
+        member_schema = StructType(
+            [StructField("id", id_type, True), StructField("root0", id_type, True)]
+        )
+        alias_schema = StructType(
+            [
+                StructField("old_root", id_type, True),
+                StructField("new_root", id_type, True),
+            ]
+        )
         batches = list(meta["batches"])
         if new_members:
-            local_df(
-                self.spark,
-                new_members,
-                StructType(
-                    [
-                        StructField("id", id_type, True),
-                        StructField("root0", id_type, True),
-                    ]
-                ),
-            ).write.mode("overwrite").parquet(
+            local_df(self.spark, new_members, member_schema).write.mode(
+                "overwrite"
+            ).parquet(
                 os.path.join(self.base_dir, f"members_b{batch_id}")
             )
             batches.append(batch_id)
@@ -571,18 +585,9 @@ class ClusterMaintainer:
             }
             folded.update(merges)
             new_av += 1
-            local_df(
-                self.spark,
-                sorted(folded.items()),
-                StructType(
-                    [
-                        StructField("old_root", id_type, True),
-                        StructField("new_root", id_type, True),
-                    ]
-                ),
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.base_dir, f"aliases_v{new_av}")
-            )
+            local_df(self.spark, sorted(folded.items()), alias_schema).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(self.base_dir, f"aliases_v{new_av}"))
         self._commit(
             {
                 **meta,
@@ -592,6 +597,10 @@ class ClusterMaintainer:
                 "aliases_v": new_av,
             }
         )
+        if new_members:
+            self._schemas["members"] = member_schema
+        if new_av != aliases_v:
+            self._schemas["aliases"] = alias_schema
         if new_av != aliases_v and aliases_v > 0:
             shutil.rmtree(
                 os.path.join(self.base_dir, f"aliases_v{aliases_v}"),
@@ -616,6 +625,7 @@ class ClusterMaintainer:
         gen = int(self._meta.get("members_gen", 0)) + 1
         new_base = os.path.join(self.base_dir, f"members_base_v{gen}")
         resolved.write.mode("overwrite").parquet(new_base)
+        self._schemas["members"] = resolved.schema
         old_batches = list(self._meta["batches"])
         old_gen = int(self._meta.get("members_gen", 0))
         old_alias = int(self._meta.get("aliases_v", 0))

@@ -17,8 +17,11 @@ by the batch:
    never recomputed, never reshuffled);
 3. exact-Jaccard verify on the candidate sliver: partner documents'
    texts are fetched from the append-only doc store (broadcast semi
-   lookup) and re-shingled — a per-doc pure function, so verification
-   is bit-identical to the one-shot pipeline's;
+   lookup) and re-shingled — a per-doc pure function — then every
+   document's shingles are packed into ONE set row, each candidate
+   joins its two sets, and ``|a ∩ b| / (|a| + |b| − |a ∩ b|)`` is the
+   one-shot pipeline's int/int ratio, so verification is bit-identical
+   to it;
 4. verified pairs append to the pairs relation and tick the embedded
    ``ClusterMaintainer`` (clustermaint.py), so duplicate-cluster labels
    stay current without any transitive-closure recompute.
@@ -67,6 +70,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from _data_engineering_pipeline_project_spark.functions.persist import read_pinned
+
 
 class NearDupIndexMaintainer:
     """Maintain the banded-signature index, verified near-dup pairs, and
@@ -104,6 +109,9 @@ class NearDupIndexMaintainer:
         os.makedirs(base_dir, exist_ok=True)
         self._checkpoint_token: str | None = None
         self._meta = self._recover()
+        # written schema per relation (docs/bands/pairs/hot): state reads
+        # skip footer inference; a reopened instance infers each once
+        self._schemas: dict = {}
         # eager v0 pointer (review r13): the lineage discipline lands
         # stage dirs from the START of a tick, so a crash inside a
         # fresh maintainer's FIRST tick would otherwise leave committed
@@ -231,7 +239,7 @@ class NearDupIndexMaintainer:
                 paths.append(p)
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return read_pinned(self.spark, paths, self._schemas, prefix)
 
     def docs(self) -> DataFrame | None:
         """(id, text) — every ingested document, append-only."""
@@ -264,7 +272,9 @@ class NearDupIndexMaintainer:
         """The frozen drop-list (shingle) — None when uncapped or not
         yet bootstrapped."""
         if int(self._meta.get("hot_gen", 0)) > 0:
-            return self.spark.read.parquet(self._hot_dir())
+            return read_pinned(
+                self.spark, [self._hot_dir()], self._schemas, "hot"
+            )
         return None
 
     def bootstrap_hot_shingles(self, corpus_df: DataFrame) -> int:
@@ -321,7 +331,8 @@ class NearDupIndexMaintainer:
         )
         hot.write.mode("overwrite").parquet(self._hot_dir())
         self._commit({**self._meta, "hot_gen": 1})
-        return self.spark.read.parquet(self._hot_dir()).count()
+        self._schemas["hot"] = hot.schema
+        return self._hot_list().count()
 
     def _apply_hot_cap(
         self, sh: DataFrame, hot: DataFrame | None
@@ -458,46 +469,53 @@ class NearDupIndexMaintainer:
                 self._apply_hot_cap(
                     _shingle_table(partners, idc, txc, self.shingle_n), hot
                 )
-            ).persist()
+            )
         else:
             sh_all = sh_b
-        # exact-Jaccard verify on candidates only — the one-shot formula
-        sizes = sh_all.groupBy(idc).agg(F.count(F.lit(1)).alias("n_sh"))
-        common = (
-            cands.join(
-                sh_all.select(F.col(idc).alias("doc_a"), "shingle"), "doc_a"
-            )
-            .join(
-                sh_all.select(F.col(idc).alias("doc_b"), "shingle"),
-                ["doc_b", "shingle"],
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("common"))
+        # exact-Jaccard verify on PACKED sets: one shingle-set row per
+        # document (the shingle rows are already distinct per doc —
+        # ``_shingles_of_tokens`` applies array_distinct — and capped),
+        # each candidate joins its two sets, and the intersection size
+        # gives the one-shot formula's int/int ratio bit-for-bit;
+        # ``common > 0`` keeps the one-shot's shared-shingle join
+        # semantics at any threshold.
+        packed = sh_all.groupBy(idc).agg(
+            F.collect_list("shingle").alias("__set")
         )
+        common = F.size(F.array_intersect("__a", "__b"))
         pairs_new = (
-            common.join(
-                sizes.select(
-                    F.col(idc).alias("doc_a"), F.col("n_sh").alias("n_a")
+            cands.join(
+                packed.select(
+                    F.col(idc).alias("doc_a"), F.col("__set").alias("__a")
                 ),
                 "doc_a",
             )
             .join(
-                sizes.select(
-                    F.col(idc).alias("doc_b"), F.col("n_sh").alias("n_b")
+                packed.select(
+                    F.col(idc).alias("doc_b"), F.col("__set").alias("__b")
                 ),
                 "doc_b",
             )
-            .withColumn(
-                "jaccard",
-                F.col("common")
-                / (F.col("n_a") + F.col("n_b") - F.col("common")),
+            .select(
+                "doc_a",
+                "doc_b",
+                common.alias("common"),
+                (F.size("__a") + F.size("__b")).alias("n_ab"),
             )
-            .filter(F.col("jaccard") >= self.threshold)
+            .select(
+                "doc_a",
+                "doc_b",
+                "common",
+                (F.col("common") / (F.col("n_ab") - F.col("common"))).alias(
+                    "jaccard"
+                ),
+            )
+            .filter((F.col("common") > 0) & (F.col("jaccard") >= self.threshold))
             .select("doc_a", "doc_b", "jaccard")
         )
         # docs/bands landed at their stage boundaries above; the pairs
         # write completes the batch's dirs, then the pointer commits
-        pairs_new.coalesce(1).write.mode("overwrite").parquet(
+        pairs_new.write.mode("overwrite").parquet(
             os.path.join(self.base_dir, f"pairs_b{batch_id}")
         )
         # tick the embedded cluster maintainer FROM THE COMMITTED FILES
@@ -519,10 +537,11 @@ class NearDupIndexMaintainer:
                 "batches": [*meta["batches"], batch_id],
             }
         )
+        self._schemas.update(
+            docs=batch_schema, bands=bands_b.schema, pairs=pairs_new.schema
+        )
         for df in (sh_b, cands):
             df.unpersist()
-        if docs is not None:
-            sh_all.unpersist()
 
     def compact(self) -> dict:
         """Fold the per-batch docs/bands/pairs dirs into one base

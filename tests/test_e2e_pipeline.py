@@ -99,3 +99,43 @@ def test_full_pipeline_two_batches(spark, tmp_path):
         ("c2", False),  # archived old version
         ("c4", True),  # tombstone
     }
+
+
+SELLERS_B1 = """seller_id,seller_zip_code_prefix,seller_city,seller_state
+s1,1000,sao paulo,SP
+s2,2000,rio,RJ
+"""
+
+SELLERS_B2 = """seller_id,seller_zip_code_prefix,seller_city,seller_state
+s1,1000,sao paulo,SP
+s2,2500,rio,RJ
+"""
+
+
+def test_pipeline_loads_tables_that_declare_bookkeeping_columns(spark, tmp_path):
+    """The registry structs of sellers and products declare ``updated_at``
+    and ``is_deleted``; the SCD2 merge owns those columns, so a source
+    read with that struct loads instead of failing with
+    COLUMN_ALREADY_EXISTS, and the second batch versions the change."""
+    b1 = str(tmp_path / "batch1")
+    b2 = str(tmp_path / "batch2")
+    _write(b1, "olist_sellers_dataset.csv", SELLERS_B1)
+    _write(b2, "olist_sellers_dataset.csv", SELLERS_B2)
+    t1, t2 = datetime(2024, 2, 1), datetime(2024, 2, 2)
+
+    pipe = Pipeline(spark, olist_registry(), str(tmp_path / "sink"))
+    r1 = pipe.run_batch(b1, t1, write_errors=False)
+    assert r1.merge_stats["sellers"] == {"insert": 2}
+    r2 = pipe.run_batch(b2, t2, write_errors=False)
+    assert r2.merge_stats["sellers"] == {"unchanged": 1, "update": 1}
+
+    cur = {r["seller_id"]: r for r in pipe.current("sellers").collect()}
+    assert cur["s2"]["seller_zip_code_prefix"] == 2500
+    assert (cur["s1"]["updated_at"], cur["s2"]["updated_at"]) == (t1, t2)
+    assert not cur["s1"]["is_deleted"] and not cur["s2"]["is_deleted"]
+    hist = [
+        (h["seller_id"], h["seller_zip_code_prefix"], h["is_deleted"],
+         h["valid_from"], h["valid_to"])
+        for h in pipe.history("sellers").collect()
+    ]
+    assert hist == [("s2", 2000, False, t1, t2)]

@@ -100,13 +100,11 @@ def _pair_batches(spark):
     ]
 
 
-def test_cluster_maintainer_local_tick_equals_distributed(spark, tmp_path):
+def _assert_local_tick_equals_distributed(spark, tmp_path, batches):
     import _data_engineering_pipeline_project_spark.operators.dedup as dedup
     from _data_engineering_pipeline_project_spark.streaming.clustermaint import (
         ClusterMaintainer,
     )
-
-    batches = _pair_batches(spark)
 
     m_local = ClusterMaintainer(spark, str(tmp_path / "local"))
     for i, b in enumerate(batches):
@@ -131,7 +129,6 @@ def test_cluster_maintainer_local_tick_equals_distributed(spark, tmp_path):
     got_local = sorted(tuple(r) for r in m_local.clusters().collect())
     got_dist = sorted(tuple(r) for r in m_dist.clusters().collect())
     assert got_local == got_dist
-    assert len(got_local) == 9  # nodes 5,10,20,30,40,50,60,70,80
 
     # state files agree relation-by-relation (members rows and the
     # folded alias map, not just the served join)
@@ -146,6 +143,26 @@ def test_cluster_maintainer_local_tick_equals_distributed(spark, tmp_path):
             tuple(r) for r in al_d.collect()
         )
     assert m_local.version == m_dist.version
+    return got_local, al_l
+
+
+def test_cluster_maintainer_local_tick_equals_distributed(spark, tmp_path):
+    got, _ = _assert_local_tick_equals_distributed(
+        spark, tmp_path, _pair_batches(spark)
+    )
+    assert len(got) == 9  # nodes 5,10,20,30,40,50,60,70,80
+
+
+def test_cluster_maintainer_local_tick_equals_distributed_two_batches(
+    spark, tmp_path
+):
+    """Default-run twin of the three-batch pin: new components, then a
+    cross-batch merge that creates the first alias."""
+    got, aliases = _assert_local_tick_equals_distributed(
+        spark, tmp_path, _pair_batches(spark)[:2]
+    )
+    assert len(got) == 8  # nodes 10,20,30,40,50,60,70,80
+    assert [tuple(r) for r in aliases.collect()] == [(30, 10)]
 
 
 def test_cluster_maintainer_local_tick_replay_and_empty(spark, tmp_path):
