@@ -17,20 +17,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from _data_engineering_pipeline_project_spark import queries as _q
-from _data_engineering_pipeline_project_spark import queries_ext as _qext  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ops as _qops  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext2 as _qext2  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext3 as _qext3  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext4 as _qext4  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext5 as _qext5  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext6 as _qext6  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext7 as _qext7  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext8 as _qext8  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext9 as _qext9  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext10 as _qext10  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext11 as _qext11  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext12 as _qext12  # noqa: F401  (registers into _q.QUERIES/ORACLES)
-from _data_engineering_pipeline_project_spark import queries_ext13 as _qext13  # noqa: F401  (registers into _q.QUERIES/ORACLES)
+
+_q.load_all()
 
 
 def entry(spark: SparkSession) -> DataFrame:

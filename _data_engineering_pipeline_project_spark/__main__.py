@@ -37,15 +37,8 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from _data_engineering_pipeline_project_spark import queries as q
-    from _data_engineering_pipeline_project_spark import queries_ext  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext2  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext3  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext4  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext5  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext6  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext7  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ext8  # noqa: F401
-    from _data_engineering_pipeline_project_spark import queries_ops  # noqa: F401
+
+    q.load_all()
 
     if args.cmd == "list":
         for name in sorted(q.QUERIES):

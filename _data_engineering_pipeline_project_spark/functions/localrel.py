@@ -56,6 +56,15 @@ def local_df(
             return spark.createDataFrame(rows, schema)
     else:
         st = schema
+    # the classic path raises on a row wider than the schema; zip()
+    # below would silently truncate it (ADVICE r13/r14) — check EVERY
+    # tuple row, outside the try so the classic fallback cannot swallow it
+    n = len(st.fields)
+    for i, r in enumerate(rows):
+        if isinstance(r, (tuple, list)) and len(r) != n:
+            raise ValueError(
+                f"row {i} has {len(r)} fields, schema declares {n}"
+            )
     if any(_has_timestamp(f.dataType) for f in st.fields):
         # session-timezone semantics are the classic path's job
         return spark.createDataFrame(rows, st)
@@ -68,14 +77,6 @@ def local_df(
         if rows and isinstance(rows[0], dict):
             cols = [[r.get(n) for r in rows] for n in names]
         elif rows:
-            # the classic path raises on a row longer than the schema;
-            # zip() would silently truncate it (ADVICE r13) — keep the
-            # malformed-input class an error here too
-            if len(rows[0]) != len(st.fields):
-                raise ValueError(
-                    f"row has {len(rows[0])} fields, schema declares "
-                    f"{len(st.fields)}"
-                )
             cols = [list(c) for c in zip(*rows)]
         else:
             cols = [[] for _ in names]

@@ -1748,3 +1748,24 @@ def excess_stock_suppliers(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select("s_suppkey", "s_name", "n_name")
     )
+
+
+# every module that registers queries beyond this one, in registration
+# order; load_all() is the one place the full surface is assembled
+_QUERY_MODULES = (
+    "queries_ext",
+    "queries_ops",
+    *(f"queries_ext{i}" for i in range(2, 14)),
+)
+
+
+def load_all() -> dict[str, QueryFn]:
+    """Import every query module (each registers into ``QUERIES`` /
+    ``ORACLES`` on import) and return ``QUERIES``. Every entry point
+    calls this, so the CLI, ``__spark_entry__`` and bench see the same
+    registry."""
+    import importlib
+
+    for mod in _QUERY_MODULES:
+        importlib.import_module(f"{__package__}.{mod}")
+    return QUERIES

@@ -14,18 +14,20 @@ Non-decomposable aggregates (exact median, distinct count) need either a
 sketch (HLL merge — also a monoid) or a full recompute; the engine keeps
 those out of the incremental path on purpose.
 
-Storage follows the Scd2Table pattern: each merge writes a new versioned
-parquet directory (atomic swap, readers never see a half-written rollup);
-with Delta/Iceberg this collapses into a ``MERGE INTO`` on one table.
+Storage is the versioned-state protocol (``streaming/versioned.py``): each
+merge writes a new versioned parquet directory and then swaps the pointer
+(readers never see a half-written rollup); with Delta/Iceberg this
+collapses into a ``MERGE INTO`` on one table.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+)
 
 
 def partial_agg(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
@@ -69,17 +71,19 @@ def merge_rollup(
     )
 
 
-class AggMaintainer:
+class AggMaintainer(VersionedDirs):
     """Maintain ``key_cols -> (n, total, vmin, vmax)`` over ``value_col``
     incrementally across micro-batches.
 
     Restart-safe: the committed rollup version persists in a ``_CURRENT``
-    pointer file (atomic ``os.replace`` swap, same protocol as
-    ``Scd2Table``), so a fresh AggMaintainer over an existing ``base_dir``
-    resumes the rollup instead of silently resetting it to the next batch.
+    pointer (``streaming/versioned.py``), so a fresh AggMaintainer over an
+    existing ``base_dir`` resumes the rollup instead of silently resetting
+    it to the next batch. A lost pointer fails loudly: sums and counts are
+    not idempotent under the redelivery that would follow.
     """
 
-    _POINTER = "_CURRENT"
+    _KIND = "agg rollup"
+    _STATE_NAME = "rollup"
 
     def __init__(
         self,
@@ -88,61 +92,9 @@ class AggMaintainer:
         key_cols: list[str],
         value_col: str,
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.key_cols = key_cols
         self.value_col = value_col
-        self.rollup_dir = os.path.join(base_dir, "rollup")
-        os.makedirs(base_dir, exist_ok=True)
-        self._version, self._last_batch_id = self._recover_version()
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover_version(self) -> tuple[int, int | None]:
-        import json
-        import re
-
-        if os.path.exists(self._pointer_path()):
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return int(meta["version"]), meta.get("last_batch_id")
-        best = 0
-        pat = re.compile(r"^rollup_v(\d+)$")
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and os.path.exists(os.path.join(self.base_dir, name, "_SUCCESS")):
-                best = max(best, int(m.group(1)))
-        return best, None
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        import json
-
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "checkpoint_token": getattr(
-                        self, "_checkpoint_token", None
-                    ),
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    @property
-    def version(self) -> int:
-        return self._version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.rollup_dir}_v{self._version}")
+        self._open(spark, base_dir)
 
     def result(self) -> DataFrame:
         """The maintained rollup with derived columns (avg = sum/count)."""
@@ -160,77 +112,8 @@ class AggMaintainer:
         foreachBatch is at-least-once: a re-delivered batch id at or
         below the committed watermark is a no-op (sums/counts are not
         idempotent under re-merge)."""
-        if (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        ):
+        if self._already_merged(batch_id):
             return
         part = partial_agg(batch_df, self.key_cols, self.value_col)
         merged = merge_rollup(part, self.current(), self.key_cols)
-        nxt = self._version + 1
-        merged.write.mode("overwrite").parquet(f"{self.rollup_dir}_v{nxt}")
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
-
-
-    def bind_checkpoint(self, token: str) -> None:
-        """Guard against a silent streaming-checkpoint reset: foreachBatch
-        ids restart at 0 when the checkpoint dir is recreated, and the
-        last_batch_id watermark would then absorb real data as
-        "redelivery" (code-review r3). The pointer records which
-        checkpoint the watermark belongs to; a DIFFERENT checkpoint must
-        fail loudly — the operator either restores the checkpoint or
-        starts a fresh maintainer base_dir. A maintainer with no recorded
-        token (pre-guard pointer, or direct merge_batch use in tests)
-        adopts the first token offered."""
-        stored = getattr(self, "_checkpoint_token", None)
-        if stored is None:
-            self._checkpoint_token = token
-            return
-        if stored != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was built "
-                f"under checkpoint {stored!r} but this run uses {token!r}; "
-                "batch ids would restart and the redelivery watermark "
-                "would silently drop data. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        """foreachBatch wrapper: resolve the checkpoint IDENTITY (the
-        query id in <checkpoint>/metadata — it exists only after the
-        query starts) and bind it before delegating; a recreated
-        checkpoint at the same path gets a new id and fails loudly."""
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df, batch_id):
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir``, maintaining the rollup.
-        The checkpoint makes file discovery incremental: a file merged
-        once is never re-aggregated (exactly-once per batch)."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._advance(merged, batch_id)

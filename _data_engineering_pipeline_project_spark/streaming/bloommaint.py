@@ -4,13 +4,13 @@ The membership artifact (``operators/membership.py``) is a monoid:
 merging per-batch word relations with ``bit_or`` yields EXACTLY the
 words of building over the union of all keys ever seen (pinned at the
 operator level by ``test_round10b.py``). That makes the filter
-incrementally maintainable with the same versioned-dir + atomic
-pointer protocol as the sibling maintainers (KMV sketches, the dedup
-seen-state, BM25 postings): a tick costs O(batch keys) to hash plus a
-merge bounded by the word-table size ``min(total_keys·k, m/60)`` rows
-— never a rescan of history — and the maintained filter serves the
-ingest-time "definitely new?" question from state that is orders of
-magnitude smaller than the seen-key relation DedupMaintainer keeps.
+incrementally maintainable with the versioned-state protocol every
+maintainer shares (``streaming/versioned.py``): a tick costs O(batch
+keys) to hash plus a merge bounded by the word-table size
+``min(total_keys·k, m/60)`` rows — never a rescan of history — and the
+maintained filter serves the ingest-time "definitely new?" question
+from state that is orders of magnitude smaller than the seen-key
+relation DedupMaintainer keeps.
 
 The two maintainers are complements, not rivals: DedupMaintainer's
 seen set is exact and admits batches; BloomMaintainer's words are the
@@ -28,26 +28,29 @@ mismatched reopen fails loudly instead.
 
 from __future__ import annotations
 
-import json
+import glob
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.membership import (
     bloom_build,
     bloom_merge,
     bloom_probe,
 )
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+    read_pointer,
+    write_pointer,
+)
 
 
-class BloomMaintainer:
+class BloomMaintainer(VersionedDirs):
     """Maintain a Bloom membership filter over the FIRST column of each
     batch (the key relation), versioned under ``base_dir``."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "bloom"
     _STATE_NAME = "words"
 
     def __init__(
@@ -57,113 +60,34 @@ class BloomMaintainer:
         m_bits: int = 1 << 20,
         k: int = 3,
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.m_bits = int(m_bits)
         self.k = int(k)
-        self.state_dir = os.path.join(base_dir, self._STATE_NAME)
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._version, self._last_batch_id = self._recover_version()
+        self._open(spark, base_dir)
 
-    # --- versioned-state plumbing (Scd2Table protocol) -------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover_version(self) -> tuple[int, int | None]:
-        try:
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            self._checkpoint_token = meta.get("checkpoint_token")
-            if (meta.get("m_bits"), meta.get("k")) != (self.m_bits, self.k):
-                raise ValueError(
-                    "bloom geometry mismatch: state at "
-                    f"{self.base_dir} was built with m_bits="
-                    f"{meta.get('m_bits')}, k={meta.get('k')} but this "
-                    f"maintainer was opened with m_bits={self.m_bits}, "
-                    f"k={self.k}; merging mixed geometry is silent "
-                    "garbage. Reopen with the recorded geometry or "
-                    "rebuild in a fresh base_dir."
-                )
-            return int(meta["version"]), meta.get("last_batch_id")
-        except FileNotFoundError:
-            pass
-        # pointer lost: adopt the highest finished words_v* (the sibling
-        # maintainers' recovery rule). Geometry can't be re-verified
-        # without the pointer — the ctor args are trusted, which is why
-        # the pointer is fsync'd and atomically replaced.
-        best = 0
-        pat = re.compile(rf"^{self._STATE_NAME}_v(\d+)$")
-        if os.path.isdir(self.base_dir):
-            for name in os.listdir(self.base_dir):
-                m = pat.match(name)
-                if m and os.path.exists(
-                    os.path.join(self.base_dir, name, "_SUCCESS")
-                ):
-                    best = max(best, int(m.group(1)))
-        return best, None
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "checkpoint_token": self._checkpoint_token,
-                    "m_bits": self.m_bits,
-                    "k": self.k,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    def _already_merged(self, batch_id: int) -> bool:
-        """foreachBatch is at-least-once; bit_or IS idempotent under
-        re-merge, but the watermark keeps the version chain and
-        last_batch_id exactly-once like the siblings."""
-        return (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        )
-
-    @property
-    def version(self) -> int:
-        return self._version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+    def _geometry(self) -> dict:
+        return {"m_bits": self.m_bits, "k": self.k}
 
     # --- filter maintenance ----------------------------------------------
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: bloom the batch's key column, bit_or-merge
         with the stored words, commit the next version (word_idx-
-        clustered, the artifact layout)."""
+        clustered, the artifact layout). bit_or is idempotent under
+        re-merge, but the watermark keeps the version chain and
+        last_batch_id exactly-once like the siblings."""
         if self._already_merged(batch_id):
             return
         key = F.col(batch_df.columns[0])
         part = bloom_build(batch_df, key, self.m_bits, self.k)
         cur = self.current()
         merged = part if cur is None else bloom_merge(part, cur)
-        nxt = self._version + 1
-        (
+        self._advance(
             merged.repartitionByRange(
                 max(1, self.spark.sparkContext.defaultParallelism // 4),
                 "word_idx",
-            )
-            .sortWithinPartitions("word_idx")
-            .write.mode("overwrite")
-            .parquet(f"{self.state_dir}_v{nxt}")
+            ).sortWithinPartitions("word_idx"),
+            batch_id,
         )
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
 
     def probe(self, df: DataFrame, key: F.Column | str) -> DataFrame:
         """Membership flags for ``df`` against the maintained filter
@@ -173,73 +97,6 @@ class BloomMaintainer:
             raise ValueError("no batches merged yet")
         key = F.col(key) if isinstance(key, str) else key
         return bloom_probe(cur, df, key, self.m_bits, self.k)
-
-    # --- streaming glue (sibling-maintainer pattern) -----------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        """Same reset guard as DedupMaintainer.bind_checkpoint: batch
-        ids restart at 0 under a recreated checkpoint and the watermark
-        would absorb real data as redelivery — fail loudly instead."""
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the filter."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                self._guarded_hook(checkpoint_dir)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def vacuum_versions(self, keep_last: int = 2) -> list[str]:
-        """Drop words_v* dirs older than the last ``keep_last`` committed
-        versions."""
-        import shutil
-
-        removed = []
-        pat = re.compile(
-            re.escape(os.path.basename(self.state_dir)) + r"_v(\d+)$"
-        )
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and int(m.group(1)) <= self._version - keep_last:
-                shutil.rmtree(os.path.join(self.base_dir, name))
-                removed.append(name)
-        return removed
 
 
 class RotatingBloomMaintainer:
@@ -265,7 +122,7 @@ class RotatingBloomMaintainer:
     LIVE, so keys from a still-in-retention window probed "definitely
     new" — a false negative, the one direction the tier promises never
     to produce. rotate() now (1) commits the advanced pointer with
-    ``needs_reset=true`` (fsync + atomic replace, the house protocol),
+    ``needs_reset=true`` (``versioned.write_pointer``: fsync + replace),
     (2) resets the slot, (3) commits ``needs_reset=false``. Every
     crash point is safe: before (1) the rotation simply never
     happened; between (1) and (2) recovery sees ``needs_reset`` and
@@ -310,42 +167,52 @@ class RotatingBloomMaintainer:
             self._reset_slot(self._current)
             self._commit_ring(needs_reset=False)
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
     def _recover(self) -> tuple[int, int, bool]:
-        try:
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            if meta.get("generations") != self.generations:
-                raise ValueError(
-                    "ring geometry mismatch: state has "
-                    f"{meta.get('generations')} generations, maintainer "
-                    f"opened with {self.generations}"
+        meta = read_pointer(
+            os.path.join(self.base_dir, self._POINTER),
+            ("current", "rotations"),
+        )
+        if meta is None:
+            # a ring that never rotated holds state in gen_0 only; state in
+            # any other slot means the ring pointer was lost, and restarting
+            # at slot 0 would reset a live window on the next rotate
+            committed = glob.glob(
+                os.path.join(
+                    glob.escape(self.base_dir), "gen_*", "words_v*", "_SUCCESS"
                 )
-            return (
-                int(meta["current"]),
-                int(meta["rotations"]),
-                bool(meta.get("needs_reset", False)),
             )
-        except FileNotFoundError:
+            rotated = sorted({p.split(os.sep)[-3] for p in committed} - {"gen_0"})
+            if rotated:
+                raise ValueError(
+                    f"rotating bloom state at {self.base_dir} has committed "
+                    f"slots {rotated} but no {self._POINTER} pointer; which "
+                    "slot is current lives only in the pointer, so this "
+                    "state cannot be safely adopted. Restore the pointer "
+                    "from backup or rebuild in a fresh base_dir."
+                )
             return 0, 0, False
+        if meta.get("generations") != self.generations:
+            raise ValueError(
+                "ring geometry mismatch: state has "
+                f"{meta.get('generations')} generations, maintainer "
+                f"opened with {self.generations}"
+            )
+        return (
+            int(meta["current"]),
+            int(meta["rotations"]),
+            bool(meta.get("needs_reset", False)),
+        )
 
     def _commit_ring(self, needs_reset: bool = False) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "current": self._current,
-                    "rotations": self._rotations,
-                    "generations": self.generations,
-                    "needs_reset": needs_reset,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
+        write_pointer(
+            os.path.join(self.base_dir, self._POINTER),
+            {
+                "current": self._current,
+                "rotations": self._rotations,
+                "generations": self.generations,
+                "needs_reset": needs_reset,
+            },
+        )
 
     def _reset_slot(self, g: int) -> None:
         """Wipe slot ``g`` and rebuild a fresh (empty) maintainer for

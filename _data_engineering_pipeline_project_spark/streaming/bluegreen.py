@@ -5,7 +5,7 @@
 (drift / balance / recall-floor evidence + artifact paths); until now
 nothing performed the swap. ``BlueGreenIndex`` is the executor: a
 generation directory per index build plus ONE fsync'd serving pointer
-(the house pointer protocol), so re-bootstrapping a frozen-quantizer
+(``versioned.write_pointer``), so re-bootstrapping a frozen-quantizer
 index (IVF-OPQ, SemDeDup, near-dup hot-list, Bloom geometry — anything
 whose identity is frozen at bootstrap) is:
 
@@ -40,12 +40,16 @@ failed re-bootstrap, each attributable to the decision row's evidence.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    read_pointer,
+    write_pointer,
+)
 
 _POINTER = "_SERVING"
 _FORMAT = "bluegreen-v1"
@@ -65,43 +69,29 @@ class BlueGreenIndex:
         os.makedirs(base_dir, exist_ok=True)
         self._meta = self._recover()
 
-    # --- pointer protocol --------------------------------------------------
+    # --- pointer protocol (``streaming/versioned.py`` I/O) ---------------
     def _pointer_path(self) -> str:
         return os.path.join(self.base_dir, _POINTER)
 
     def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                try:
-                    meta = json.load(fh)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {_POINTER} pointer at {self.base_dir} "
-                        f"(invalid JSON: {e}); the serving generation and "
-                        "counter live only in the pointer. Restore it from "
-                        "backup — do NOT guess a generation to serve."
-                    ) from e
+        meta = read_pointer(self._pointer_path(), required=())
+        if meta is not None:
             if meta.get("format") != _FORMAT:
                 raise ValueError(
                     f"blue/green state at {self.base_dir} has format "
                     f"{meta.get('format')!r}, expected {_FORMAT!r}"
                 )
             return meta
-        except FileNotFoundError:
-            pass
         # gen dirs without a pointer are NOT adoptable (torn-build risk)
-        if os.path.isdir(self.base_dir):
-            debris = [
-                n for n in os.listdir(self.base_dir) if n.startswith("gen_")
-            ]
-            if debris:
-                raise ValueError(
-                    f"blue/green state at {self.base_dir} has generation "
-                    f"dirs ({sorted(debris)}) but no {_POINTER} pointer; "
-                    "a generation without a pointer record cannot be "
-                    "distinguished from a torn build. Restore the pointer "
-                    "or start a fresh base_dir."
-                )
+        debris = [n for n in os.listdir(self.base_dir) if n.startswith("gen_")]
+        if debris:
+            raise ValueError(
+                f"blue/green state at {self.base_dir} has generation "
+                f"dirs ({sorted(debris)}) but no {_POINTER} pointer; "
+                "a generation without a pointer record cannot be "
+                "distinguished from a torn build. Restore the pointer "
+                "or start a fresh base_dir."
+            )
         return {
             "format": _FORMAT,
             "serving_gen": None,
@@ -122,12 +112,7 @@ class BlueGreenIndex:
         }
 
     def _commit(self, meta: dict) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
+        write_pointer(self._pointer_path(), meta)
         self._meta = meta
 
     # --- resolution ----------------------------------------------------------

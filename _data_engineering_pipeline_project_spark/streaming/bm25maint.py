@@ -19,8 +19,8 @@ O(batch) + O(vocabulary) cost per tick, never O(corpus):
   long-count division Spark's ``avg`` performs inside the one-shot
   build, which is what makes incrementally-served scores bit-identical
   to a one-shot rebuild (test-pinned).
-- **commit** follows the house pointer protocol (``Scd2Table`` /
-  ``AggMaintainer``): batch postings and the merged ``meta_v{N}``
+- **commit** follows the versioned-state protocol
+  (``streaming/versioned.py``): batch postings and the merged ``meta_v{N}``
   (dictionary, stats, params) land fully before the ``_CURRENT``
   pointer swaps, so a crash leaves the previous version serving and an
   orphan directory, never a torn index. foreachBatch redelivery is a
@@ -42,26 +42,31 @@ world per cycle).
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _data_engineering_pipeline_project_spark.operators import textstats as TS
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
-_POINTER = "_CURRENT"
 _FORMAT = "dl-in-postings-v2"
 
 
-class Bm25Maintainer:
+class Bm25Maintainer(VersionedState):
     """Maintain a served BM25 index over append-only document batches.
 
     ``serve_index()`` returns the same dict shape as
     ``ranking.load_bm25_index``, so ``ranking.bm25_scores_from_index``
     serves from a maintained index unchanged.
     """
+
+    _KIND = "BM25 maintainer"
+    # committed state is a meta dir PLUS an ordered batch list only the
+    # pointer records; postings dirs alone cannot be re-adopted
+    _ORPHANS = ("meta_v*/stats/_SUCCESS",)
 
     def __init__(
         self,
@@ -71,74 +76,13 @@ class Bm25Maintainer:
         text_col: str = "text",
         files_per_batch: int = 4,
     ) -> None:
-        self.spark = spark
-        self.base_dir = base_dir
         self.id_col = id_col
         self.text_col = text_col
         self.files_per_batch = files_per_batch
-        os.makedirs(base_dir, exist_ok=True)
-        self._meta = self._recover()
+        self._open(spark, base_dir, version=0, batches=[])
 
-    # -- pointer protocol -------------------------------------------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, _POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                meta = json.load(fh)
-            if meta.get("format") != _FORMAT:
-                raise ValueError(
-                    f"BM25 maintainer state at {self.base_dir} has format "
-                    f"{meta.get('format')!r}, expected {_FORMAT!r} — rebuild"
-                )
-            return meta
-        except FileNotFoundError:
-            pass
-        # pointer lost: unlike the bloom/agg maintainers, committed
-        # state here is a meta dir PLUS an ordered batch list only the
-        # pointer records — the postings dirs alone cannot be safely
-        # re-adopted (a half-written batch dir is indistinguishable
-        # from a committed one). Silently returning version 0 would
-        # RESTART the index over live state — fail loudly instead
-        # (adversarial-artifact sweep r11).
-        if os.path.isdir(self.base_dir):
-            orphaned = [
-                n
-                for n in os.listdir(self.base_dir)
-                if re.match(r"^meta_v(\d+)$", n)
-                and os.path.exists(
-                    os.path.join(self.base_dir, n, "stats", "_SUCCESS")
-                )
-            ]
-            if orphaned:
-                raise ValueError(
-                    f"BM25 maintainer state at {self.base_dir} has "
-                    f"committed meta dirs ({sorted(orphaned)}) but no "
-                    f"{_POINTER} pointer; the batch ordering lives "
-                    "only in the pointer, so this state cannot be "
-                    "safely adopted. Restore the pointer from backup or "
-                    "rebuild in a fresh base_dir."
-                )
-        return {
-            "version": 0,
-            "last_batch_id": None,
-            "batches": [],
-            "format": _FORMAT,
-        }
-
-    def _commit(self, meta: dict) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
-
-    @property
-    def version(self) -> int:
-        return self._meta["version"]
+    def _geometry(self) -> dict:
+        return {"format": _FORMAT}
 
     def _meta_dir(self, version: int) -> str:
         return os.path.join(self.base_dir, f"meta_v{version}")
@@ -152,8 +96,7 @@ class Bm25Maintainer:
         tokenize + postings write, O(vocab) dictionary merge, O(1)
         stats merge. Redelivered batch ids at or below the watermark
         are no-ops."""
-        last = self._meta["last_batch_id"]
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
         bname = f"b{batch_id}"
         dl = batch_df.select(
@@ -243,71 +186,10 @@ class Bm25Maintainer:
             for f in futs:
                 f.result()
         self._commit(
-            {
-                **self._meta,  # preserves checkpoint_token and format
-                "version": nxt,
-                "last_batch_id": batch_id,
-                "batches": self._meta["batches"] + [bname],
-            }
+            version=nxt,
+            last_batch_id=batch_id,
+            batches=self._meta["batches"] + [bname],
         )
-
-    def bind_checkpoint(self, token: str) -> None:
-        """Same guard as ``AggMaintainer.bind_checkpoint`` (review r3):
-        foreachBatch ids restart at 0 when a streaming checkpoint is
-        recreated, and the last_batch_id watermark would then absorb
-        real data as "redelivery". A different checkpoint must fail
-        loudly; a maintainer with no recorded token adopts the first."""
-        stored = self._meta.get("checkpoint_token")
-        if stored is None:
-            self._commit({**self._meta, "checkpoint_token": token})
-            return
-        if stored != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: BM25 maintainer state was "
-                f"built under checkpoint {stored!r} but this run uses "
-                f"{token!r}; batch ids would restart and the redelivery "
-                "watermark would silently drop data. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        """foreachBatch wrapper (the ``AggMaintainer`` pattern): resolve
-        the checkpoint IDENTITY once the query exists and bind it before
-        delegating, so a recreated checkpoint at the same path fails
-        loudly instead of replaying batch ids into the watermark."""
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df, batch_id):
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new document files from ``source_dir`` into the index.
-        The streaming checkpoint makes file discovery incremental —
-        each file's docs are tokenized and folded exactly once, which
-        is precisely the maintainer's append-only contract."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # -- maintenance -------------------------------------------------------
     def compact(self) -> None:
@@ -333,12 +215,13 @@ class Bm25Maintainer:
             .write.mode("overwrite")
             .parquet(self._batch_dir(cname))
         )
-        self._commit({**self._meta, "batches": [cname]})
+        old = self._meta["batches"]
+        self._commit(batches=[cname])
         # old batch dirs are debris the pointer no longer references;
         # GC is idempotent (a crash here just leaves orphans)
         import shutil
 
-        for b in self._meta["batches"]:
+        for b in old:
             if b != cname:
                 shutil.rmtree(self._batch_dir(b), ignore_errors=True)
 

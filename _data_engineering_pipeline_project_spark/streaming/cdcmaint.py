@@ -20,35 +20,33 @@ Two state subtleties the batch operator alone doesn't cover:
 - **Redelivery + checkpoint identity.** foreachBatch is at-least-once:
   batch ids at or below the committed watermark are no-ops, and the
   watermark is tokened to the streaming checkpoint's IDENTITY
-  (streaming/ckptid.py) so a recreated checkpoint fails loudly instead
-  of silently absorbing real batches as "redelivery".
+  (``versioned.checkpoint_identity``) so a recreated checkpoint fails
+  loudly instead of silently absorbing real batches as "redelivery".
 
-Storage follows the Scd2Table/AggMaintainer protocol: each merge writes
-``state_v{n}`` then atomically swaps a ``_CURRENT`` pointer
-(``os.replace``), so readers never observe a half-written snapshot and
-a restart resumes from the committed version.
+Storage is the versioned-state protocol (``streaming/versioned.py``):
+each merge writes ``state_v{n}`` then atomically swaps a ``_CURRENT``
+pointer, so readers never observe a half-written snapshot and a restart
+resumes from the committed version.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from _data_engineering_pipeline_project_spark.operators.cdc import (
     apply_changelog,
 )
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+)
 
 
-class CdcSnapshotMaintainer:
+class CdcSnapshotMaintainer(VersionedDirs):
     """Maintain the compacted state of a CDC changelog across
     micro-batches; ``snapshot()`` is the live (tombstone-free) view."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "CDC snapshot"
 
     def __init__(
         self,
@@ -59,59 +57,15 @@ class CdcSnapshotMaintainer:
         op_col: str = "op",
         delete_op: str = "D",
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.key_cols = key_cols
         self.seq_cols = seq_cols
         self.op_col = op_col
         self.delete_op = delete_op
-        self.state_dir = os.path.join(base_dir, "state")
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._version, self._last_batch_id = self._recover_version()
-
-    # -- pointer protocol (same as AggMaintainer / Scd2Table) ------------
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover_version(self) -> tuple[int, int | None]:
-        if os.path.exists(self._pointer_path()):
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return int(meta["version"]), meta.get("last_batch_id")
-        best = 0
-        pat = re.compile(r"^state_v(\d+)$")
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and os.path.exists(os.path.join(self.base_dir, name, "_SUCCESS")):
-                best = max(best, int(m.group(1)))
-        return best, None
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "checkpoint_token": self._checkpoint_token,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    @property
-    def version(self) -> int:
-        return self._version
+        self._open(spark, base_dir)
 
     def current_state(self) -> DataFrame | None:
         """Compacted state INCLUDING tombstones (the merge input)."""
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+        return self.current()
 
     def snapshot(self) -> DataFrame:
         """The live table: latest winner per key, deletes excluded."""
@@ -126,7 +80,7 @@ class CdcSnapshotMaintainer:
         (key, seq) — one window keyed on the PK; the stored side is the
         compacted state (one row per live-or-tombstoned key), not the
         history."""
-        if self._last_batch_id is not None and batch_id <= self._last_batch_id:
+        if self._already_merged(batch_id):
             return
         cur = self.current_state()
         allc = batch_df if cur is None else cur.unionByName(batch_df)
@@ -138,57 +92,4 @@ class CdcSnapshotMaintainer:
             self.delete_op,
             keep_tombstones=True,
         )
-        nxt = self._version + 1
-        merged.write.mode("overwrite").parquet(f"{self.state_dir}_v{nxt}")
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
-
-    # -- checkpoint identity guard (same protocol as AggMaintainer) ------
-    def bind_checkpoint(self, token: str) -> None:
-        stored = self._checkpoint_token
-        if stored is None:
-            self._checkpoint_token = token
-            return
-        if stored != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was built "
-                f"under checkpoint {stored!r} but this run uses {token!r}; "
-                "batch ids would restart and the redelivery watermark "
-                "would silently drop data. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df, batch_id):
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new changelog files from ``source_dir`` into the
-        snapshot (exactly-once per batch via the checkpoint +
-        watermark)."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._advance(merged, batch_id)

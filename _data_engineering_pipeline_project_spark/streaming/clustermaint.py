@@ -23,7 +23,7 @@ test) — the same N-ticks == one-shot contract every maintainer in the
 family carries.
 
 State (versioned dirs + fsync'd atomic ``_CURRENT`` pointer +
-checkpoint-identity guard, the house protocol):
+checkpoint-identity guard, ``streaming/versioned.py``):
 
 - ``members`` (append-only): one row ``(id, root0)`` per node, written
   ONCE when the node is first seen, with the component root at insert
@@ -64,24 +64,27 @@ batches) built on the same pair graph the batch queries oracle.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.functions.persist import read_pinned
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
 
-class ClusterMaintainer:
+class ClusterMaintainer(VersionedState):
     """Maintain connected-component labels over a stream of near-dup
     pair batches; labels equal a one-shot ``connected_components`` over
     the union of every batch merged so far, bit-for-bit."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "cluster"
+    # the batch manifest (WHICH member dirs are live) exists only in the
+    # pointer: adopting orphans could resurrect a vacuumed/aborted dir
+    _ORPHANS = ("members_b*/_SUCCESS",)  # also matches members_base_v*
 
     def __init__(
         self,
@@ -90,103 +93,17 @@ class ClusterMaintainer:
         a_col: str = "doc_a",
         b_col: str = "doc_b",
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.a_col = a_col
         self.b_col = b_col
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._meta = self._recover()
+        self._open(
+            spark, base_dir, version=0, batches=[], members_gen=0, aliases_v=0
+        )
         # written schema per relation (members/aliases): state reads skip
         # footer inference; a reopened instance infers each once
         self._schemas: dict = {}
 
-    # --- pointer protocol (house pattern) ---------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as f:
-                try:
-                    meta = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the "
-                        "member-dir manifest and alias version live only "
-                        "in the pointer, so the state cannot be safely "
-                        "merged into. Restore the pointer from backup or "
-                        "rebuild in a fresh base_dir."
-                    ) from e
-            if "version" not in meta or "batches" not in meta:
-                raise ValueError(
-                    f"corrupt {self._POINTER} pointer at {self.base_dir}"
-                    " (missing 'version'/'batches' — truncated or foreign"
-                    " write); restore the pointer from backup or rebuild"
-                    " in a fresh base_dir."
-                )
-            if (meta.get("a_col"), meta.get("b_col")) != (
-                self.a_col,
-                self.b_col,
-            ):
-                raise ValueError(
-                    "cluster geometry mismatch: state at "
-                    f"{self.base_dir} was built with a_col="
-                    f"{meta.get('a_col')!r}, b_col={meta.get('b_col')!r} "
-                    f"but this maintainer was opened with "
-                    f"a_col={self.a_col!r}, b_col={self.b_col!r}; reopen "
-                    "with the recorded pair columns or rebuild in a fresh "
-                    "base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return meta
-        except FileNotFoundError:
-            pass
-        # pointer lost with committed state present: the batch manifest
-        # (WHICH member dirs are live) exists only in the pointer —
-        # adopting orphans could silently resurrect a vacuumed/aborted
-        # dir. Fail loudly (the Bm25Maintainer rule).
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if re.match(r"^(members_b\d+|members_base_v\d+)$", n)
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"cluster maintainer state at {self.base_dir} has "
-                    f"committed member dirs ({orphaned}) but no "
-                    f"{self._POINTER} pointer; the live-dir manifest "
-                    "lives only in the pointer, so this state cannot be "
-                    "safely adopted. Restore the pointer from backup or "
-                    "rebuild in a fresh base_dir."
-                )
-        return {
-            "version": 0,
-            "last_batch_id": None,
-            "batches": [],
-            "members_gen": 0,
-            "aliases_v": 0,
-            "a_col": self.a_col,
-            "b_col": self.b_col,
-        }
-
-    def _commit(self, meta: dict) -> None:
-        meta = {**meta, "checkpoint_token": self._checkpoint_token}
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
-
-    @property
-    def version(self) -> int:
-        return int(self._meta["version"])
+    def _geometry(self) -> dict:
+        return {"a_col": self.a_col, "b_col": self.b_col}
 
     # --- state relations ---------------------------------------------------
 
@@ -263,10 +180,9 @@ class ClusterMaintainer:
         latency dominated the tick (profiled: 1.5-2.3 s wall vs 0.4-0.9
         s summed job time at sf0.1). Batches past the gate take the
         distributed path below, unchanged."""
-        meta = self._meta
-        last = meta.get("last_batch_id")
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
+        meta = self._meta
         from _data_engineering_pipeline_project_spark.operators.dedup import (
             _default_small_graph_edges,
             connected_components,
@@ -456,13 +372,10 @@ class ClusterMaintainer:
         if merges is not None:
             merges.unpersist()
         self._commit(
-            {
-                **meta,
-                "version": int(meta["version"]) + 1,
-                "last_batch_id": batch_id,
-                "batches": batches,
-                "aliases_v": aliases_v,
-            }
+            version=int(meta["version"]) + 1,
+            last_batch_id=batch_id,
+            batches=batches,
+            aliases_v=aliases_v,
         )
         if n_new > 0:
             self._schemas["members"] = new_members_rows.schema
@@ -589,13 +502,10 @@ class ClusterMaintainer:
                 "overwrite"
             ).parquet(os.path.join(self.base_dir, f"aliases_v{new_av}"))
         self._commit(
-            {
-                **meta,
-                "version": int(meta["version"]) + 1,
-                "last_batch_id": batch_id,
-                "batches": batches,
-                "aliases_v": new_av,
-            }
+            version=int(meta["version"]) + 1,
+            last_batch_id=batch_id,
+            batches=batches,
+            aliases_v=new_av,
         )
         if new_members:
             self._schemas["members"] = member_schema
@@ -629,14 +539,7 @@ class ClusterMaintainer:
         old_batches = list(self._meta["batches"])
         old_gen = int(self._meta.get("members_gen", 0))
         old_alias = int(self._meta.get("aliases_v", 0))
-        self._commit(
-            {
-                **self._meta,
-                "batches": [],
-                "members_gen": gen,
-                "aliases_v": 0,
-            }
-        )
+        self._commit(batches=[], members_gen=gen, aliases_v=0)
         for b in old_batches:
             shutil.rmtree(
                 os.path.join(self.base_dir, f"members_b{b}"),
@@ -653,49 +556,3 @@ class ClusterMaintainer:
                 ignore_errors=True,
             )
         return {"folded_batches": len(old_batches), "members_gen": gen}
-
-    # --- streaming glue -----------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new pair files from ``source_dir`` into the clusters."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

@@ -15,32 +15,29 @@ ever?" at O(1)-relation cost while the exact per-key rollup
 Geometry (width, depth) is frozen at first commit and recorded in the
 pointer — merging cells of different geometry is silent garbage, so a
 mismatched reopen fails loudly (the BloomMaintainer discipline).
-Versioned dirs + fsync'd atomic pointer + checkpoint-identity guard:
-the house protocol.
+Versioned dirs, pointer and checkpoint guard: ``streaming/versioned.py``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.frequency import (
     cm_build,
     cm_estimate,
     cm_merge,
 )
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+)
 
 
-class CountMinMaintainer:
+class CountMinMaintainer(VersionedDirs):
     """Maintain a CM sketch over the FIRST column of each batch,
     versioned under ``base_dir``."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "count-min"
     _STATE_NAME = "cells"
 
     def __init__(
@@ -50,111 +47,12 @@ class CountMinMaintainer:
         width: int = 1024,
         depth: int = 3,
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.width = int(width)
         self.depth = int(depth)
-        self.state_dir = os.path.join(base_dir, self._STATE_NAME)
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._version, self._last_batch_id = self._recover()
+        self._open(spark, base_dir)
 
-    # --- pointer protocol ---------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> tuple[int, int | None]:
-        try:
-            with open(self._pointer_path()) as f:
-                try:
-                    meta = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the "
-                        "batch-id watermark and sketch geometry live "
-                        "only in the pointer, so the state cannot be "
-                        "safely served or merged into. Restore the "
-                        "pointer from backup or rebuild in a fresh "
-                        "base_dir."
-                    ) from e
-            if "version" not in meta:
-                raise ValueError(
-                    f"corrupt {self._POINTER} pointer at {self.base_dir}"
-                    " (no 'version' field — truncated or foreign write);"
-                    " restore the pointer from backup or rebuild in a "
-                    "fresh base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            if (meta.get("width"), meta.get("depth")) != (
-                self.width,
-                self.depth,
-            ):
-                raise ValueError(
-                    "count-min geometry mismatch: state at "
-                    f"{self.base_dir} was built with width="
-                    f"{meta.get('width')}, depth={meta.get('depth')} but "
-                    f"this maintainer was opened with width={self.width}, "
-                    f"depth={self.depth}; merging mixed geometry is "
-                    "silent garbage. Reopen with the recorded geometry "
-                    "or rebuild in a fresh base_dir."
-                )
-            return int(meta["version"]), meta.get("last_batch_id")
-        except FileNotFoundError:
-            pass
-        # pointer lost with state dirs present: counts are NOT
-        # idempotent under re-merge, and the batch-id watermark lives
-        # ONLY in the pointer — silently adopting the newest cells_v*
-        # dir would double-count every redelivered batch, and silently
-        # ignoring it would overwrite live counts at version 1. Neither
-        # is recoverable after the fact, so fail loudly (the
-        # Bm25Maintainer rule, extended per VERDICT r11 #7).
-        pat = re.compile(rf"^{self._STATE_NAME}_v(\d+)$")
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if pat.match(n)
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"count-min maintainer state at {self.base_dir} has "
-                    f"committed cells dirs ({orphaned}) but no "
-                    f"{self._POINTER} pointer; the batch-id watermark "
-                    "lives only in the pointer and counter merges are "
-                    "not idempotent, so this state cannot be safely "
-                    "adopted. Restore the pointer from backup or "
-                    "rebuild in a fresh base_dir."
-                )
-        return 0, None
-
-    def _commit(self, version: int, batch_id: int | None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "width": self.width,
-                    "depth": self.depth,
-                    "checkpoint_token": self._checkpoint_token,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    @property
-    def version(self) -> int:
-        return self._version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+    def _geometry(self) -> dict:
+        return {"width": self.width, "depth": self.depth}
 
     # --- maintenance -----------------------------------------------------------
 
@@ -163,22 +61,13 @@ class CountMinMaintainer:
         add into the stored cells, commit the next version. Counts are
         NOT idempotent under re-merge, so the batch-id watermark is
         load-bearing (unlike Bloom's bit_or)."""
-        if (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        ):
+        if self._already_merged(batch_id):
             return
         key = F.col(batch_df.columns[0])
         part = cm_build(batch_df, key, self.width, self.depth)
         cur = self.current()
         merged = part if cur is None else cm_merge(part, cur)
-        nxt = self._version + 1
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.state_dir}_v{nxt}"
-        )
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
+        self._advance(merged.coalesce(1), batch_id)
 
     def estimate(self, df: DataFrame, key: F.Column | str) -> DataFrame:
         """CM estimates for ``df``'s distinct keys against everything
@@ -240,65 +129,3 @@ class CountMinMaintainer:
             "cm_estimate",
             (F.col("exact_count") >= thr).alias("is_heavy"),
         )
-
-    # --- streaming glue -----------------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the sketch."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def vacuum_versions(self, keep_last: int = 2) -> list[str]:
-        """Drop cells_v* dirs older than the last ``keep_last``
-        committed versions."""
-        import shutil
-
-        removed = []
-        pat = re.compile(
-            re.escape(os.path.basename(self.state_dir)) + r"_v(\d+)$"
-        )
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and int(m.group(1)) <= self._version - keep_last:
-                shutil.rmtree(os.path.join(self.base_dir, name))
-                removed.append(name)
-        return removed

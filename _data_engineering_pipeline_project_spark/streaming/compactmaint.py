@@ -16,9 +16,10 @@ This module is that loop composed from Spark primitives:
   keys, `operators/sampling.py:zorder_value`) + ``sortWithinPartitions``
   → each output file covers a tight key range, so row-group min/max
   stats prune reads on the clustered column(s).
-- **Commit** follows the house `Scd2Table` protocol: the compacted
-  generation lands in a fresh ``gen_v{N}`` directory, then a
-  ``_CURRENT`` pointer file swaps atomically (``os.replace``) — readers
+- **Commit** uses the shared pointer I/O (``streaming/versioned.py``):
+  the compacted generation lands in a fresh ``gen_v{N}`` directory,
+  then a ``_CURRENT`` pointer file swaps atomically (fsync'd temp file
+  + ``os.replace``) — readers
   resolve the pointer and never see a half-written generation; a
   crashed compaction leaves an orphan directory, not a broken table.
   Files that arrive DURING a compaction are not lost: they stay in the
@@ -43,6 +44,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    read_pointer,
+    write_pointer,
+)
 
 _POINTER = "_CURRENT"
 _MANIFEST = "_CONSUMED"
@@ -128,25 +134,28 @@ class CompactionMaintainer:
         self.quantize_bits = quantize_bits
         os.makedirs(table_dir, exist_ok=True)
 
-    # -- pointer protocol (Scd2Table pattern) ---------------------------
+    # -- pointer protocol (``streaming/versioned.py`` I/O) ---------------
     def _pointer_path(self) -> str:
         return os.path.join(self.table_dir, _POINTER)
 
     def current_version(self) -> int | None:
-        try:
-            with open(self._pointer_path()) as fh:
-                return int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
+        """The committed generation (None before the first compaction).
+        A pointer that is not an integer raises: serving landing files
+        alone would silently drop every compacted row."""
+        v = read_pointer(self._pointer_path(), required=())
+        if v is not None and not isinstance(v, int):
+            raise ValueError(
+                f"corrupt {_POINTER} pointer at {self.table_dir} "
+                f"(expected a generation number, got {v!r})"
+            )
+        return v
 
     def _gen_dir(self, version: int) -> str:
         return os.path.join(self.table_dir, f"gen_v{version}")
 
     def _commit(self, version: int) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer_path())  # atomic on POSIX
+        # the pointer is the bare generation number (JSON of an int)
+        write_pointer(self._pointer_path(), int(version))
 
     def _consumed(self, version: int | None) -> set[str]:
         """Basenames of landing files already folded into ``version``

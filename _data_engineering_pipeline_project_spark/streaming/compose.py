@@ -45,13 +45,19 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    checkpoint_identity,
+    drain_available_now,
+)
+
 
 class FanoutDrain:
     """Drain one stream into many maintainers.
 
     ``routes``: list of ``(name, maintainer, transform)`` — the
-    maintainer must follow the house protocol (``merge_batch(df,
-    batch_id)`` + ``bind_checkpoint(token)``); ``transform`` maps the
+    maintainer must follow the versioned-state protocol
+    (``streaming/versioned.py``: ``merge_batch(df, batch_id)`` +
+    ``bind_checkpoint(token)``); ``transform`` maps the
     micro-batch to that maintainer's input relation (None = identity).
     Maintainers that need a one-off ``bootstrap`` (frozen quantizers)
     must be bootstrapped BEFORE the drain starts — the drain only
@@ -92,10 +98,6 @@ class FanoutDrain:
         """The composed foreachBatch: bind every maintainer to this
         checkpoint's identity, persist the batch once, fold it through
         every route."""
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
         def fold(batch_df: DataFrame, batch_id: int) -> None:
             token = checkpoint_identity(checkpoint_dir)
             # resolve callable routes ONCE per batch (blue/green
@@ -132,15 +134,11 @@ class FanoutDrain:
         shared streaming checkpoint; each file's rows tick each
         maintainer exactly once (per-maintainer watermarks absorb
         crash replays)."""
-        stream = (
-            spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
+        drain_available_now(
+            spark,
+            source_dir,
+            schema,
+            checkpoint_dir,
+            self.hook(checkpoint_dir),
+            source_format,
         )
-        q = (
-            stream.writeStream.foreachBatch(self.hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

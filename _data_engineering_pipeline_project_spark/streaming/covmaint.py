@@ -25,11 +25,12 @@ This maintainer keeps them as standing state:
   can re-train an OPQ rotation from maintained statistics WITHOUT
   re-scanning history — the corpus is touched only to re-encode.
 
-Crash-safety: the house protocol (versioned sums dirs + fsync'd
-``_CURRENT`` pointer + batch-id watermark + checkpoint-identity
-guard). Sums are not idempotent under re-merge, so the watermark is
-load-bearing (the CountMinMaintainer rule). Geometry (dim, columns,
-quant scale) is the state's identity — mismatched reopen fails loudly.
+Crash-safety: the versioned-state protocol (``streaming/versioned.py``:
+versioned sums dirs, fsync'd ``_CURRENT`` pointer, batch-id watermark,
+checkpoint-identity guard). Sums are not idempotent under re-merge,
+so the watermark is load-bearing (the CountMinMaintainer rule).
+Geometry (dim, columns, quant scale) is the state's identity —
+mismatched reopen fails loudly.
 
 CONTRACT: batches are NEW vectors only (append-only corpus — the
 Bm25Maintainer rule); updates/deletes are a rebuild. NULL elements /
@@ -39,25 +40,28 @@ contract).
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
 _FORMAT = "cov-sums-v1"
 _DEC = "decimal(38,0)"
 
 
-class CovarianceMaintainer:
+class CovarianceMaintainer(VersionedState):
     """Maintain exact PCA sufficient statistics (n, Sᵢ, Gram triangle)
     over append-only vector batches; the served covariance/mean/model
     equal ``pca_fit(union, method='gram')`` bit-for-bit."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "covariance"
+    _ORPHANS = ("sums_v*/_SUCCESS",)
 
     def __init__(
         self,
@@ -67,105 +71,24 @@ class CovarianceMaintainer:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.dim = int(dim)
         self.id_col = id_col
         self.vec_col = vec_col
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._meta = self._recover()
-        # eager v0 pointer (review r13): sums_v1 lands before the first
-        # pointer commit; without a pinned manifest a crash in that
-        # window would brick recovery on the orphan guard
-        if not os.path.exists(self._pointer_path()):
-            self._commit(self._meta)
+        self._open(spark, base_dir, version=0)
 
-    # --- pointer protocol -------------------------------------------------
     def _geometry(self) -> dict:
+        # the quantized sums are meaningless under a different geometry
         from _data_engineering_pipeline_project_spark.operators.pca import (
             QUANT_SCALE,
         )
 
         return {
+            "format": _FORMAT,
             "dim": self.dim,
             "id_col": self.id_col,
             "vec_col": self.vec_col,
             "quant_scale": int(QUANT_SCALE),
         }
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                try:
-                    meta = json.load(fh)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the live "
-                        "version and watermark live only in the pointer. "
-                        "Restore it from backup or rebuild in a fresh "
-                        "base_dir."
-                    ) from e
-            if meta.get("format") != _FORMAT:
-                raise ValueError(
-                    f"covariance maintainer state at {self.base_dir} has "
-                    f"format {meta.get('format')!r}, expected {_FORMAT!r}"
-                )
-            want = self._geometry()
-            got = {k: meta.get(k) for k in want}
-            if got != want:
-                raise ValueError(
-                    "covariance geometry mismatch: state at "
-                    f"{self.base_dir} was built with {got} but this "
-                    f"maintainer was opened with {want}; the quantized "
-                    "sums are meaningless under a different geometry. "
-                    "Reopen with the recorded geometry or rebuild in a "
-                    "fresh base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return meta
-        except FileNotFoundError:
-            pass
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if re.match(r"^sums_v\d+$", n)
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"covariance maintainer state at {self.base_dir} has "
-                    f"committed sums dirs ({orphaned}) but no "
-                    f"{self._POINTER} pointer; the live version lives "
-                    "only in the pointer, so this state cannot be safely "
-                    "adopted. Restore the pointer from backup or rebuild "
-                    "in a fresh base_dir."
-                )
-        return {
-            "format": _FORMAT,
-            "version": 0,
-            "last_batch_id": None,
-            **self._geometry(),
-        }
-
-    def _commit(self, meta: dict) -> None:
-        meta = {**meta, "checkpoint_token": self._checkpoint_token}
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
-
-    @property
-    def version(self) -> int:
-        return int(self._meta["version"])
 
     def _sums_dir(self, v: int) -> str:
         return os.path.join(self.base_dir, f"sums_v{v}")
@@ -185,8 +108,7 @@ class CovarianceMaintainer:
         one decimal merge of the d²-bounded state. Redelivered batch
         ids at or below the watermark are no-ops (sums are not
         idempotent — the watermark is load-bearing)."""
-        last = self._meta.get("last_batch_id")
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
         from _data_engineering_pipeline_project_spark.operators.pca import (
             _gram_parts,
@@ -245,9 +167,7 @@ class CovarianceMaintainer:
         merged.coalesce(1).write.mode("overwrite").parquet(
             self._sums_dir(nxt)
         )
-        self._commit(
-            {**self._meta, "version": nxt, "last_batch_id": batch_id}
-        )
+        self._commit(version=nxt, last_batch_id=batch_id)
         # GC every superseded sums dir, not just the immediate
         # predecessor — a crash between a past commit and its rmtree
         # would otherwise strand that version forever (review r13);
@@ -370,53 +290,3 @@ class CovarianceMaintainer:
             "mean": [float(r["m"]) for r in mean_rows],
             "dim": dim,
         }
-
-    # --- streaming glue ------------------------------------------------------
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            # commit-on-adopt (the Bm25Maintainer rule, review r13): an
-            # in-memory-only token lets a recreated checkpoint slip past
-            # the guard whenever the early batches no-op on the
-            # watermark and nothing else commits
-            self._checkpoint_token = token
-            self._commit(self._meta)
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new vector files from ``source_dir`` into the sums."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

@@ -11,8 +11,8 @@ O(batch) plus one join against state keyed on the fingerprint — at
 100 TB the state is a fingerprint-bucketed table and the anti join is
 hash-partitioned on fp with no corpus rescan ever.
 
-Durability follows the repo's versioned-dir + atomic pointer protocol
-(Scd2Table / AggMaintainer / KmvMaintainer): state version N+1 and the
+Durability follows the versioned-state protocol
+(``streaming/versioned.py``): state version N+1 and the
 batch's accepted-rows subdir are both written BEFORE the pointer moves,
 so a crash at any point leaves the previous consistent state visible;
 foreachBatch's at-least-once redelivery is absorbed by the recorded
@@ -28,23 +28,27 @@ content-level dedup semantics the reference lacks.
 
 from __future__ import annotations
 
-import json
+import glob
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.textstats import (
     fingerprint,
 )
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+)
 
 
-class DedupMaintainer:
+class DedupMaintainer(VersionedDirs):
     """Admit only content-new documents across micro-batches."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "dedup"
+    _STATE_NAME = "seen"
+    _ORPHANS = ("seen_v*/_SUCCESS", "accepted/batch_id=*/_SUCCESS")
 
     def __init__(
         self,
@@ -53,53 +57,34 @@ class DedupMaintainer:
         id_col: str = "doc_id",
         text_col: str = "text",
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.id_col = id_col
         self.text_col = text_col
-        self.state_dir = os.path.join(base_dir, "seen")
         self.accepted_dir = os.path.join(base_dir, "accepted")
-        os.makedirs(base_dir, exist_ok=True)
-        self._version, self._last_batch_id = self._recover_version()
+        self._open(spark, base_dir)
 
-    # --- pointer protocol (shared shape with AggMaintainer) ---------------
+    def _adopt_orphans(self, fresh: dict, orphans: list[str]) -> dict:
+        """Lost pointer: adopt the highest finished seen_v* state and the
+        highest finished accepted batch. Safe because admission is an
+        anti join against the seen set: a batch redelivered after
+        adoption admits nothing twice (pinned by
+        ``tests/test_dedupmaint.py::test_lost_pointer_recovers_from_scan``).
+        Without it the next batch would re-admit every previously-seen
+        fingerprint AND clobber accepted/batch_id=0 (code-review r3)."""
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
+        def highest(parent: str, prefix: str) -> int | None:
+            pat = re.compile(re.escape(prefix) + r"(\d+)$")
+            done = glob.glob(
+                os.path.join(glob.escape(parent), prefix + "*", "_SUCCESS")
+            )
+            found = [
+                int(m.group(1))
+                for p in done
+                if (m := pat.match(os.path.basename(os.path.dirname(p))))
+            ]
+            return max(found, default=None)
 
-    def _recover_version(self) -> tuple[int, int | None]:
-        try:
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return int(meta["version"]), meta.get("last_batch_id")
-        except FileNotFoundError:
-            pass
-        # pointer lost (operator error): scan for the highest finished
-        # seen_v* state and the highest finished accepted batch, like the
-        # sibling maintainers — WITHOUT this, a lost pointer silently
-        # resets to version 0 and the next batch re-admits every
-        # previously-seen fingerprint AND clobbers accepted/batch_id=0
-        # (code-review r3).
-        best_v = 0
-        pat = re.compile(r"^seen_v(\d+)$")
-        if os.path.isdir(self.base_dir):
-            for name in os.listdir(self.base_dir):
-                m = pat.match(name)
-                if m and os.path.exists(
-                    os.path.join(self.base_dir, name, "_SUCCESS")
-                ):
-                    best_v = max(best_v, int(m.group(1)))
-        best_b: int | None = None
-        bpat = re.compile(r"^batch_id=(\d+)$")
-        if os.path.isdir(self.accepted_dir):
-            for name in os.listdir(self.accepted_dir):
-                m = bpat.match(name)
-                if m and os.path.exists(
-                    os.path.join(self.accepted_dir, name, "_SUCCESS")
-                ):
-                    b = int(m.group(1))
-                    best_b = b if best_b is None else max(best_b, b)
+        best_v = highest(self.base_dir, "seen_v") or 0
+        best_b = highest(self.accepted_dir, "batch_id=")
         # Orphan discrimination (code-review r3 round 2): a crash between
         # the batch-output write and the seen-state write leaves the max
         # accepted/batch_id dir WITHOUT its fingerprints in any seen_v*.
@@ -113,7 +98,7 @@ class DedupMaintainer:
                 best_b = None
             else:
                 seen_n = self.spark.read.parquet(
-                    f"{self.state_dir}_v{best_v}"
+                    self._state_path(best_v)
                 ).count()
                 acc_n = (
                     self.spark.read.option("basePath", self.accepted_dir)
@@ -123,38 +108,10 @@ class DedupMaintainer:
                 )
                 if seen_n < acc_n:
                     best_b = best_b - 1 if best_b > 0 else None
-        return best_v, best_b
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "checkpoint_token": getattr(
-                        self, "_checkpoint_token", None
-                    ),
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    def _already_merged(self, batch_id: int) -> bool:
-        return (
-            self._last_batch_id is not None and batch_id <= self._last_batch_id
-        )
-
-    @property
-    def version(self) -> int:
-        return self._version
+        return {**fresh, "version": best_v, "last_batch_id": best_b}
 
     def seen(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+        return self.current()
 
     # --- batch admission --------------------------------------------------
 
@@ -186,12 +143,8 @@ class DedupMaintainer:
         )
         new_fps = fresh.select("__fp")
         state = new_fps if cur is None else cur.unionByName(new_fps)
-        nxt = self._version + 1
-        state.write.mode("overwrite").parquet(f"{self.state_dir}_v{nxt}")
+        self._advance(state, batch_id)
         fresh.unpersist()
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
 
     def accepted(self) -> DataFrame:
         """Everything admitted so far — COMMITTED batches only: a crash
@@ -199,84 +152,11 @@ class DedupMaintainer:
         orphan batch_id subdir whose id exceeds the committed
         last_batch_id; the filter makes it invisible until the batch is
         redelivered and properly committed."""
-        if self._version == 0:
+        if self.version == 0:
             raise ValueError("no batches accepted yet")
         df = self.spark.read.option("basePath", self.accepted_dir).parquet(
             self.accepted_dir
         )
         return df.filter(F.col("batch_id") <= F.lit(self._last_batch_id))
 
-
-    def bind_checkpoint(self, token: str) -> None:
-        """Guard against a silent streaming-checkpoint reset: foreachBatch
-        ids restart at 0 when the checkpoint dir is recreated, and the
-        last_batch_id watermark would then absorb real data as
-        "redelivery" (code-review r3). The pointer records which
-        checkpoint the watermark belongs to; a DIFFERENT checkpoint must
-        fail loudly — the operator either restores the checkpoint or
-        starts a fresh maintainer base_dir. A maintainer with no recorded
-        token (pre-guard pointer, or direct merge_batch use in tests)
-        adopts the first token offered."""
-        stored = getattr(self, "_checkpoint_token", None)
-        if stored is None:
-            self._checkpoint_token = token
-            return
-        if stored != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was built "
-                f"under checkpoint {stored!r} but this run uses {token!r}; "
-                "batch ids would restart and the redelivery watermark "
-                "would silently drop data. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        """foreachBatch wrapper: resolve the checkpoint IDENTITY (the
-        query id in <checkpoint>/metadata — it exists only after the
-        query starts) and bind it before delegating; a recreated
-        checkpoint at the same path gets a new id and fails loudly."""
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df, batch_id):
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.accept_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` through the dedup gate."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def vacuum_versions(self, keep_last: int = 2) -> list[str]:
-        """Drop seen_v* dirs older than the last ``keep_last`` committed
-        versions (accepted/ subdirs are the data, never vacuumed)."""
-        import shutil
-
-        removed = []
-        pat = re.compile(re.escape(os.path.basename(self.state_dir)) + r"_v(\d+)$")
-        parent = os.path.dirname(self.state_dir)
-        for name in os.listdir(parent):
-            m = pat.match(name)
-            if m and int(m.group(1)) <= self._version - keep_last:
-                shutil.rmtree(os.path.join(parent, name))
-                removed.append(name)
-        return removed
+    merge_batch = accept_batch  # the protocol's foreachBatch tick

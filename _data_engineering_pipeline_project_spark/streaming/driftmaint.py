@@ -32,23 +32,20 @@ shifted dims first — from two bounded d-row reads. The operational
 loop: accumulate a trusted window, mark it, keep merging ticks, alert
 on the report; re-mark after an accepted encoder change.
 
-Versioned-dir + fsync'd atomic pointer + checkpoint-identity guard:
-the house maintainer protocol (aggmaint.py / bloommaint.py).
+Versioned dirs, pointer and checkpoint guard: ``streaming/versioned.py``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.pca import (
     QUANT_SCALE,
     quantized_elements,
+)
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
 )
 
 _DEC = "decimal(38,0)"
@@ -117,134 +114,29 @@ def moments_from_partials(parts: DataFrame) -> DataFrame:
     )
 
 
-class DriftMaintainer:
+class DriftMaintainer(VersionedDirs):
     """Maintain per-dimension embedding moments incrementally; compare
     against a pinned baseline. Batches are frames with the vector in
-    ``vec_col`` (first column serves as the id for quantization)."""
+    ``vec_col`` (first column serves as the id for quantization).
 
-    _POINTER = "_CURRENT"
+    The pointer also records the pinned ``baseline_version`` and the
+    vector width ``dim`` the first batch fixed."""
+
+    _KIND = "drift"
     _STATE_NAME = "moments"
 
     def __init__(
         self, spark: SparkSession, base_dir: str, vec_col: str = "embedding"
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.vec_col = vec_col
-        self.state_dir = os.path.join(base_dir, self._STATE_NAME)
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        (
-            self._version,
-            self._last_batch_id,
-            self._baseline_version,
-        ) = self._recover()
+        self._open(spark, base_dir, baseline_version=None, dim=None)
 
-    # --- pointer protocol -------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> tuple[int, int | None, int | None]:
-        try:
-            with open(self._pointer_path()) as f:
-                try:
-                    meta = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the "
-                        "batch-id watermark and the pinned baseline "
-                        "version live only in the pointer, so the "
-                        "state cannot be safely merged into. Restore "
-                        "the pointer from backup or rebuild in a fresh "
-                        "base_dir."
-                    ) from e
-            if "version" not in meta:
-                raise ValueError(
-                    f"corrupt {self._POINTER} pointer at {self.base_dir}"
-                    " (no 'version' field — truncated or foreign write);"
-                    " restore the pointer from backup or rebuild in a "
-                    "fresh base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            self._dim = meta.get("dim")
-            if meta.get("vec_col", self.vec_col) != self.vec_col:
-                raise ValueError(
-                    "drift geometry mismatch: state at "
-                    f"{self.base_dir} tracks column "
-                    f"{meta.get('vec_col')!r} but this maintainer was "
-                    f"opened with vec_col={self.vec_col!r}; merging "
-                    "moments of different columns is silent garbage. "
-                    "Reopen with the recorded column or rebuild in a "
-                    "fresh base_dir."
-                )
-            return (
-                int(meta["version"]),
-                meta.get("last_batch_id"),
-                meta.get("baseline_version"),
-            )
-        except FileNotFoundError:
-            pass
-        self._dim = None
-        # pointer lost with state dirs present: power sums are NOT
-        # idempotent under re-merge (the watermark is load-bearing) and
-        # the pinned baseline version is recorded only in the pointer —
-        # adopting the newest moments_v* dir would double-count
-        # redelivered batches AND silently forget which version the
-        # drift report compares against. Fail loudly (the
-        # Bm25Maintainer rule, extended per VERDICT r11 #7).
-        pat = re.compile(rf"^{self._STATE_NAME}_v(\d+)$")
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if pat.match(n)
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"drift maintainer state at {self.base_dir} has "
-                    f"committed moments dirs ({orphaned}) but no "
-                    f"{self._POINTER} pointer; the batch-id watermark "
-                    "and baseline version live only in the pointer and "
-                    "power-sum merges are not idempotent, so this "
-                    "state cannot be safely adopted. Restore the "
-                    "pointer from backup or rebuild in a fresh "
-                    "base_dir."
-                )
-        return 0, None, None
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "baseline_version": self._baseline_version,
-                    "checkpoint_token": self._checkpoint_token,
-                    "vec_col": self.vec_col,
-                    "dim": self._dim,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    @property
-    def version(self) -> int:
-        return self._version
+    def _geometry(self) -> dict:
+        return {"vec_col": self.vec_col}
 
     @property
     def baseline_version(self) -> int | None:
-        return self._baseline_version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+        return self._meta.get("baseline_version")
 
     # --- maintenance --------------------------------------------------------
 
@@ -253,10 +145,7 @@ class DriftMaintainer:
         shuffle over the BATCH), decimal-merge into the stored d-row
         state, commit the next version. At-least-once safe via the
         batch-id watermark (sums are not idempotent under re-merge)."""
-        if (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        ):
+        if self._already_merged(batch_id):
             return
         # cached so the width guard's count and the merge write share
         # ONE batch aggregation (the frame is d rows — trivial storage)
@@ -271,23 +160,16 @@ class DriftMaintainer:
             d_batch = part.count()
             if d_batch == 0:
                 return  # empty/all-NULL batch: nothing to merge
-            if self._dim is None:
-                self._dim = int(d_batch)
-            elif int(d_batch) != self._dim:
+            dim = self._meta.get("dim")
+            if dim is not None and int(d_batch) != dim:
                 raise ValueError(
                     f"drift geometry mismatch: state at {self.base_dir} "
-                    f"tracks {self._dim}-dim vectors but this batch has "
+                    f"tracks {dim}-dim vectors but this batch has "
                     f"width {d_batch}; a changed encoder width needs a "
                     "new base_dir (and a new baseline)."
                 )
             merged = merge_partials(part, self.current())
-            nxt = self._version + 1
-            merged.coalesce(1).write.mode("overwrite").parquet(
-                f"{self.state_dir}_v{nxt}"
-            )
-            self._commit(nxt, batch_id)
-            self._version = nxt
-            self._last_batch_id = batch_id
+            self._advance(merged.coalesce(1), batch_id, dim=int(d_batch))
         finally:
             part.unpersist()
 
@@ -303,23 +185,20 @@ class DriftMaintainer:
     def mark_baseline(self) -> int:
         """Pin the current version as the reference distribution. The
         pointer records it (crash-safe) and vacuum never drops it."""
-        if self._version == 0:
+        if self.version == 0:
             raise ValueError("no batches merged yet")
-        self._baseline_version = self._version
-        self._commit(self._version, self._last_batch_id)
-        return self._baseline_version
+        self._commit(baseline_version=self.version)
+        return self.version
 
     def drift_report(self, top: int = 10) -> DataFrame:
         """Audit-shaped drift relation — per-dim baseline-vs-now mean
         shift and variance ratio, largest mean shift first (the
         ``embedding_drift_audit`` columns, so dashboards and oracles
         transfer). Two bounded d-row reads; no corpus scan."""
-        if self._baseline_version is None:
+        if self.baseline_version is None:
             raise ValueError("no baseline marked (call mark_baseline)")
         base = moments_from_partials(
-            self.spark.read.parquet(
-                f"{self.state_dir}_v{self._baseline_version}"
-            )
+            self.spark.read.parquet(self._state_path(self.baseline_version))
         ).select(
             "dim", F.col("mu").alias("mu_a"), F.col("var").alias("var_a")
         )
@@ -344,70 +223,3 @@ class DriftMaintainer:
             .orderBy(F.col("mean_shift").desc(), "dim")
             .limit(top)
         )
-
-    # --- streaming glue (house pattern) ---------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the moment state."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def vacuum_versions(self, keep_last: int = 2) -> list[str]:
-        """Drop moments_v* older than the last ``keep_last`` versions,
-        ALWAYS keeping the pinned baseline version."""
-        import shutil
-
-        removed = []
-        pat = re.compile(
-            re.escape(os.path.basename(self.state_dir)) + r"_v(\d+)$"
-        )
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if not m:
-                continue
-            v = int(m.group(1))
-            if v == self._baseline_version:
-                continue
-            if v <= self._version - keep_last:
-                shutil.rmtree(os.path.join(self.base_dir, name))
-                removed.append(name)
-        return removed

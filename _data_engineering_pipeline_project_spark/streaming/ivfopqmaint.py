@@ -26,39 +26,47 @@ the FAISS-standard index form incrementally maintained END TO END:
   build over the accumulated corpus BIT-FOR-BIT (pinned by test).
 
 Crash-safety composition: the codes half is exactly-once (versioned
-batch dirs + fsync'd pointer + watermark — the OpqIndexMaintainer
-protocol). The lists half is an immutable-file APPEND with no
-watermark of its own, so a crash between the codes commit and the
-outer pointer commit can leave a redelivered batch's assignments in
-the lists TWICE. Assignment is deterministic (same frozen centroids →
-same list, identical rows), so the serve path collapses duplicates
-with a DISTINCT on the candidate sliver — (query, id) pairs after the
-probe restriction, never the corpus — making served results exact
-under any crash/redelivery interleaving (pinned by test). The outer
-pointer only carries the watermark + checkpoint identity; state
-recovery follows the house rules (orphaned halves fail loudly through
-their own maintainers' guards).
+batch dirs + fsync'd pointer + watermark —
+``streaming/versioned.py``). The lists half is an immutable-file
+APPEND with no watermark of its own, so a crash between the codes
+commit and the outer pointer commit can leave a redelivered batch's
+assignments in the lists TWICE. Assignment is deterministic (same
+frozen centroids → same list, identical rows), so the serve path
+collapses duplicates with a DISTINCT on the candidate sliver — (query,
+id) pairs after the probe restriction, never the corpus — making
+served results exact under any crash/redelivery interleaving (pinned
+by test). The outer pointer only carries the watermark + checkpoint
+identity; a lost outer pointer over bootstrapped halves fails loudly,
+like every maintainer's (``streaming/versioned.py``).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
 _FORMAT = "ivf-opq-v1"
 
 
-class IvfOpqIndexMaintainer:
+class IvfOpqIndexMaintainer(VersionedState):
     """Composed maintained IVF-OPQ index under ``base_dir``:
     ``opq/`` (an ``OpqIndexMaintainer`` — frozen rotation + codebooks
     + growing codes), ``ivf/`` (an ``IvfIndexMaintainer`` over rotated
     vectors — frozen coarse quantizer + growing lists), ``_CURRENT``
     (outer watermark)."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "IVF-OPQ"
+    # committed content only — the OPQ half's frozen artifact or the IVF
+    # half's written quantizer. Bare opq/ or ivf/ dirs (and the OPQ half's
+    # empty pointer) are NOT orphans: constructing the maintainer creates
+    # them before bootstrap, and treating them as adoptable state bricked
+    # a never-bootstrapped base_dir (r12 review finding).
+    _ORPHANS = ("opq/artifact/pq", "ivf/centroids/_SUCCESS")
 
     def __init__(
         self, spark: SparkSession, base_dir: str, num_centroids: int = 8
@@ -70,12 +78,8 @@ class IvfOpqIndexMaintainer:
             OpqIndexMaintainer,
         )
 
-        self.spark = spark
-        self.base_dir = base_dir
         self.num_centroids = int(num_centroids)
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._meta = self._recover()
+        self._open(spark, base_dir, bootstrapped=False)
         self.codes = OpqIndexMaintainer(spark, os.path.join(base_dir, "opq"))
         # lists carry ROTATED vectors: dim resolves lazily from the
         # frozen params once bootstrapped (r = m·sub_dim)
@@ -85,75 +89,9 @@ class IvfOpqIndexMaintainer:
             num_centroids=self.num_centroids,
         )
 
-    # --- pointer protocol -------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                try:
-                    meta = json.load(fh)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the "
-                        "watermark lives only in the pointer. Restore "
-                        "it from backup or rebuild in a fresh base_dir."
-                    ) from e
-            if meta.get("format") != _FORMAT:
-                raise ValueError(
-                    f"IVF-OPQ maintainer state at {self.base_dir} has "
-                    f"format {meta.get('format')!r}, expected "
-                    f"{_FORMAT!r} — rebuild"
-                )
-            if meta.get("num_centroids") != self.num_centroids:
-                raise ValueError(
-                    "IVF-OPQ geometry mismatch: state at "
-                    f"{self.base_dir} was fit with num_centroids="
-                    f"{meta.get('num_centroids')} but this maintainer "
-                    f"was opened with {self.num_centroids}; the coarse "
-                    "quantizer is the index's identity. Reopen with "
-                    "the recorded geometry or rebuild in a fresh "
-                    "base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return meta
-        except FileNotFoundError:
-            pass
-        # committed content only: the OPQ half's own pointer or the IVF
-        # half's written quantizer. Bare opq/ or ivf/ dirs are NOT
-        # orphans — constructing the maintainer makedirs opq/ before
-        # bootstrap, and treating that as adoptable state permanently
-        # bricked a never-bootstrapped base_dir (r12 review finding).
-        if os.path.exists(
-            os.path.join(self.base_dir, "opq", "_CURRENT")
-        ) or os.path.exists(
-            os.path.join(self.base_dir, "ivf", "centroids", "_SUCCESS")
-        ):
-            raise ValueError(
-                f"IVF-OPQ maintainer state at {self.base_dir} has "
-                f"bootstrapped halves but no {self._POINTER} pointer; "
-                "the watermark lives only in the pointer, so this "
-                "state cannot be safely adopted. Restore the pointer "
-                "or re-bootstrap in a fresh base_dir."
-            )
-        return {
-            "format": _FORMAT,
-            "bootstrapped": False,
-            "num_centroids": self.num_centroids,
-            "last_batch_id": None,
-        }
-
-    def _commit(self, meta: dict) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
+    def _geometry(self) -> dict:
+        # the coarse quantizer is the index's identity
+        return {"format": _FORMAT, "num_centroids": self.num_centroids}
 
     # --- bootstrap ----------------------------------------------------------
 
@@ -194,15 +132,7 @@ class IvfOpqIndexMaintainer:
         self.lists.vec_col = vec_col
         self.lists.fit(rot)
         self.lists.ingest(rot)
-        self._commit(
-            {
-                "format": _FORMAT,
-                "bootstrapped": True,
-                "num_centroids": self.num_centroids,
-                "last_batch_id": None,
-                "checkpoint_token": self._checkpoint_token,
-            }
-        )
+        self._commit(bootstrapped=True)
 
     def _rotate(self, df: DataFrame) -> DataFrame:
         from _data_engineering_pipeline_project_spark.operators.pca import (
@@ -233,14 +163,13 @@ class IvfOpqIndexMaintainer:
         no-ops; a crash anywhere inside re-runs safely (codes half
         no-ops on its own watermark; a duplicated list append is
         collapsed at serve time — see module docstring)."""
-        last = self._meta.get("last_batch_id")
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
         if not self._meta.get("bootstrapped"):
             raise ValueError("not bootstrapped yet (call bootstrap)")
         self.codes.merge_batch(batch_df, batch_id)
         self.lists.ingest(self._rotate(batch_df))
-        self._commit({**self._meta, "last_batch_id": batch_id})
+        self._commit(last_batch_id=batch_id)
 
     # --- serving ----------------------------------------------------------------
 
@@ -310,50 +239,3 @@ class IvfOpqIndexMaintainer:
         self.lists.vec_col = p["vec_col"]
         self.codes.compact()
         return self.lists.compact_hot_lists(self.spark)
-
-    # --- streaming glue ---------------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            self._commit({**self._meta, "checkpoint_token": token})
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the index."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

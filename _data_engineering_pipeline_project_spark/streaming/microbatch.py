@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.scd2 import Scd2Table
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    drain_available_now,
+)
 
 
 class IncrementalLoader:
@@ -67,19 +70,15 @@ class IncrementalLoader:
 
     def run_available_now(self, checkpoint_dir: str) -> None:
         """Drain all pending files and stop — the cron-style trigger."""
-        reader = (
-            self.spark.readStream.format(self.source_format)
-            .schema(self.schema)
-            .option("maxFilesPerTrigger", 1)  # one snapshot file per batch
+        drain_available_now(
+            self.spark,
+            self.source_dir,
+            self.schema,
+            checkpoint_dir,
+            self._merge_batch,
+            self.source_format,
+            maxFilesPerTrigger=1,  # one snapshot file per batch
         )
-        stream = reader.load(self.source_dir)
-        q = (
-            stream.writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     def run_processing_time(
         self,

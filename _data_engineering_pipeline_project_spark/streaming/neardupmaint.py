@@ -61,25 +61,32 @@ extension — the standing near-dup index a 100 TB ingest maintains.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.functions.persist import read_pinned
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
 
-class NearDupIndexMaintainer:
+class NearDupIndexMaintainer(VersionedState):
     """Maintain the banded-signature index, verified near-dup pairs, and
     duplicate-cluster labels of everything ingested so far; all three
     served relations equal their one-shot twins over the union of every
     batch, bit-for-bit."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "near-dup index"
+    # per-batch and compacted dirs (``*_b*`` also matches ``*_base_v*``)
+    _ORPHANS = (
+        "docs_b*/_SUCCESS",
+        "bands_b*/_SUCCESS",
+        "pairs_b*/_SUCCESS",
+        "hot_shingles_v*/_SUCCESS",
+    )
 
     def __init__(
         self,
@@ -95,8 +102,6 @@ class NearDupIndexMaintainer:
     ):
         if num_hashes % rows_per_band != 0:
             raise ValueError("num_hashes must be divisible by rows_per_band")
-        self.spark = spark
-        self.base_dir = base_dir
         self.id_col = id_col
         self.text_col = text_col
         self.shingle_n = int(shingle_n)
@@ -106,22 +111,10 @@ class NearDupIndexMaintainer:
         self.max_shingle_df = (
             int(max_shingle_df) if max_shingle_df is not None else None
         )
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._meta = self._recover()
+        self._open(spark, base_dir, version=0, batches=[])
         # written schema per relation (docs/bands/pairs/hot): state reads
         # skip footer inference; a reopened instance infers each once
         self._schemas: dict = {}
-        # eager v0 pointer (review r13): the lineage discipline lands
-        # stage dirs from the START of a tick, so a crash inside a
-        # fresh maintainer's FIRST tick would otherwise leave committed
-        # dirs with no pointer — exactly the state _recover refuses to
-        # adopt. Pinning the empty manifest at construction makes that
-        # window a normal replay (orphan dirs not in the manifest are
-        # overwritten); the orphan guard still fires for dirs that
-        # predate the pointer (foreign/lost state).
-        if not os.path.exists(self._pointer_path()):
-            self._commit(self._meta)
         from _data_engineering_pipeline_project_spark.streaming.clustermaint import (
             ClusterMaintainer,
         )
@@ -129,8 +122,6 @@ class NearDupIndexMaintainer:
         self._cc = ClusterMaintainer(
             spark, os.path.join(base_dir, "clusters"), "doc_a", "doc_b"
         )
-
-    # --- pointer protocol (house pattern) ---------------------------------
 
     def _geometry(self) -> dict:
         return {
@@ -145,86 +136,6 @@ class NearDupIndexMaintainer:
             # None for pre-cap states: meta.get() defaults align.
             "max_shingle_df": self.max_shingle_df,
         }
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as f:
-                try:
-                    meta = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the index "
-                        "geometry and batch manifest live only in the "
-                        "pointer, so the state cannot be safely merged "
-                        "into. Restore the pointer from backup or rebuild "
-                        "in a fresh base_dir."
-                    ) from e
-            if "version" not in meta or "batches" not in meta:
-                raise ValueError(
-                    f"corrupt {self._POINTER} pointer at {self.base_dir}"
-                    " (missing 'version'/'batches' — truncated or foreign"
-                    " write); restore the pointer from backup or rebuild"
-                    " in a fresh base_dir."
-                )
-            want = self._geometry()
-            got = {k: meta.get(k) for k in want}
-            if got != want:
-                raise ValueError(
-                    "near-dup index geometry mismatch: state at "
-                    f"{self.base_dir} was built with {got} but this "
-                    f"maintainer was opened with {want}; a different "
-                    "signature/banding geometry changes every stored "
-                    "band row. Reopen with the recorded geometry or "
-                    "rebuild in a fresh base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return meta
-        except FileNotFoundError:
-            pass
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if re.match(
-                    r"^((docs|bands|pairs)_(b\d+|base_v\d+)"
-                    r"|hot_shingles_v\d+)$",
-                    n,
-                )
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"near-dup index state at {self.base_dir} has "
-                    f"committed dirs ({orphaned}) but no "
-                    f"{self._POINTER} pointer; the geometry and batch "
-                    "manifest live only in the pointer, so this state "
-                    "cannot be safely adopted. Restore the pointer from "
-                    "backup or rebuild in a fresh base_dir."
-                )
-        return {
-            "version": 0,
-            "last_batch_id": None,
-            "batches": [],
-            **self._geometry(),
-        }
-
-    def _commit(self, meta: dict) -> None:
-        meta = {**meta, "checkpoint_token": self._checkpoint_token}
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
-
-    @property
-    def version(self) -> int:
-        return int(self._meta["version"])
 
     # --- served relations ---------------------------------------------------
 
@@ -330,7 +241,7 @@ class NearDupIndexMaintainer:
             .select("shingle")
         )
         hot.write.mode("overwrite").parquet(self._hot_dir())
-        self._commit({**self._meta, "hot_gen": 1})
+        self._commit(hot_gen=1)
         self._schemas["hot"] = hot.schema
         return self._hot_list().count()
 
@@ -355,10 +266,9 @@ class NearDupIndexMaintainer:
         a replay, not new content). All writes are per-batch dirs in
         overwrite mode + a last-committed pointer, so a crash anywhere
         replays idempotently."""
-        meta = self._meta
-        last = meta.get("last_batch_id")
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
+        meta = self._meta
         from _data_engineering_pipeline_project_spark.operators.dedup import (
             _band_frame,
             _shingle_table,
@@ -530,12 +440,9 @@ class NearDupIndexMaintainer:
             batch_id,
         )
         self._commit(
-            {
-                **meta,
-                "version": int(meta["version"]) + 1,
-                "last_batch_id": batch_id,
-                "batches": [*meta["batches"], batch_id],
-            }
+            version=int(meta["version"]) + 1,
+            last_batch_id=batch_id,
+            batches=[*meta["batches"], batch_id],
         )
         self._schemas.update(
             docs=batch_schema, bands=bands_b.schema, pairs=pairs_new.schema
@@ -580,7 +487,7 @@ class NearDupIndexMaintainer:
             p: int(self._meta.get(f"{p}_gen", 0))
             for p in ("docs", "bands", "pairs")
         }
-        self._commit({**self._meta, "batches": [], **new_gens})
+        self._commit(batches=[], **new_gens)
         for prefix in ("docs", "bands", "pairs"):
             for b in old_batches:
                 shutil.rmtree(
@@ -595,49 +502,3 @@ class NearDupIndexMaintainer:
                     ignore_errors=True,
                 )
         return {"folded_batches": len(old_batches), **new_gens}
-
-    # --- streaming glue -----------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new document files from ``source_dir`` into the index."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

@@ -26,84 +26,41 @@ index, and the monitoring story is already in the engine:
 ``opq_balance_audit`` re-checks allocation balance; past threshold,
 re-bootstrap offline (one job) and swap artifacts atomically.
 
-Protocol: versioned pointer (fsync + atomic replace), batch-id
-watermark for at-least-once foreachBatch, checkpoint-identity guard,
-``compact()`` folding batch dirs into the base codes on the
-table-compaction cadence — the house maintainer family.
+Protocol: ``streaming/versioned.py`` (fsync'd atomic pointer, batch-id
+watermark for at-least-once foreachBatch, checkpoint-identity guard),
+plus ``compact()`` folding batch dirs into the base codes on the
+table-compaction cadence.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
 _FORMAT = "opq-codes-v1"
 
 
-class OpqIndexMaintainer:
+class OpqIndexMaintainer(VersionedState):
     """Maintain the codes relation of a bootstrapped OPQ index under
     ``base_dir``: ``artifact/`` (save_opq_index output — frozen),
     ``codes_inc/b{N}/`` (per-batch encoded appends), ``_CURRENT``."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "OPQ maintainer"
+    # the batch list lives only in the pointer
+    _ORPHANS = ("artifact/pq",)
 
     def __init__(self, spark: SparkSession, base_dir: str):
-        self.spark = spark
-        self.base_dir = base_dir
         self.artifact_dir = os.path.join(base_dir, "artifact")
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._meta = self._recover()
+        self._open(spark, base_dir, bootstrapped=False, batches=[])
         self._index: dict | None = None  # lazy: model + codebooks
 
-    # --- pointer protocol -------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as fh:
-                meta = json.load(fh)
-            if meta.get("format") != _FORMAT:
-                raise ValueError(
-                    f"OPQ maintainer state at {self.base_dir} has format "
-                    f"{meta.get('format')!r}, expected {_FORMAT!r} — rebuild"
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return meta
-        except FileNotFoundError:
-            pass
-        # orphaned state without a pointer: the batch list lives only
-        # in the pointer (the Bm25Maintainer rule) — fail loudly
-        if os.path.isdir(os.path.join(self.artifact_dir, "pq")):
-            raise ValueError(
-                f"OPQ maintainer state at {self.base_dir} has a "
-                "bootstrapped artifact but no _CURRENT pointer; the "
-                "batch list lives only in the pointer, so this state "
-                "cannot be safely adopted. Restore the pointer or "
-                "re-bootstrap in a fresh base_dir."
-            )
-        return {
-            "format": _FORMAT,
-            "bootstrapped": False,
-            "last_batch_id": None,
-            "batches": [],
-        }
-
-    def _commit(self, meta: dict) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
+    def _geometry(self) -> dict:
+        return {"format": _FORMAT}
 
     def _batch_dir(self, name: str) -> str:
         return os.path.join(self.base_dir, "codes_inc", name)
@@ -148,15 +105,7 @@ class OpqIndexMaintainer:
             vec_col=vec_col,
             model=model,
         )
-        self._commit(
-            {
-                "format": _FORMAT,
-                "bootstrapped": True,
-                "last_batch_id": None,
-                "batches": [],
-                "checkpoint_token": self._checkpoint_token,
-            }
-        )
+        self._commit(bootstrapped=True)
 
     def _loaded(self) -> dict:
         if self._index is None:
@@ -177,8 +126,7 @@ class OpqIndexMaintainer:
         per-(vector, subspace) argmin aggregate over the BATCH) and
         append a subspace-clustered codes dir. Redelivered batch ids at
         or below the watermark are no-ops."""
-        last = self._meta["last_batch_id"]
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
         ix = self._loaded()
         p = ix["params"]
@@ -208,11 +156,7 @@ class OpqIndexMaintainer:
             .parquet(self._batch_dir(bname))
         )
         self._commit(
-            {
-                **self._meta,
-                "last_batch_id": batch_id,
-                "batches": self._meta["batches"] + [bname],
-            }
+            last_batch_id=batch_id, batches=self._meta["batches"] + [bname]
         )
 
     # --- serving ----------------------------------------------------------------
@@ -266,9 +210,7 @@ class OpqIndexMaintainer:
         )
         old_batches = self._meta["batches"]
         old_gen = int(self._meta.get("codes_gen", 0))
-        self._commit(
-            {**self._meta, "batches": [], "codes_gen": gen}
-        )
+        self._commit(batches=[], codes_gen=gen)
         import shutil
 
         for b in old_batches:
@@ -278,50 +220,3 @@ class OpqIndexMaintainer:
                 os.path.join(self.base_dir, f"codes_base_v{old_gen}"),
                 ignore_errors=True,
             )
-
-    # --- streaming glue ---------------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            self._commit({**self._meta, "checkpoint_token": token})
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the codes."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

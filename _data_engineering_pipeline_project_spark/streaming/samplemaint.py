@@ -16,8 +16,8 @@ This is the streaming form of the KMV idea the distinct-count sketch
 (``sketchmaint.py``) already rides — there the k smallest hashes
 estimate cardinality; here they carry their ROWS and are the sample.
 A 100 TB ingest keeps a live, always-current eval panel at k-row state
-cost, with the versioned-dir + fsync'd pointer + checkpoint-identity
-protocol shared by every maintainer in the family.
+cost, with the versioned-state protocol shared by every maintainer in
+the family (``streaming/versioned.py``).
 
 NULL keys are dropped (md5 of NULL is NULL — they could never rank).
 Duplicate keys: the same key re-arriving replaces nothing (same hash,
@@ -27,16 +27,15 @@ deterministic function of the SET of rows seen).
 
 from __future__ import annotations
 
-import json
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+)
 
 
-class SampleMaintainer:
+class SampleMaintainer(VersionedDirs):
     """Maintain the bottom-``k``-by-``md5(key_col)`` rows of everything
     merged so far, versioned under ``base_dir``.
 
@@ -49,7 +48,7 @@ class SampleMaintainer:
     their own k-row heap on first appearance — the balanced eval panel
     stays balanced as the group universe grows."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "sample"
     _STATE_NAME = "sample"
 
     def __init__(
@@ -62,115 +61,19 @@ class SampleMaintainer:
     ):
         if k < 1:
             raise ValueError("k must be >= 1")
-        self.spark = spark
-        self.base_dir = base_dir
         self.key_col = key_col
         self.k = int(k)
         self.group_col = group_col
-        self.state_dir = os.path.join(base_dir, self._STATE_NAME)
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._version, self._last_batch_id = self._recover()
+        self._open(spark, base_dir)
 
-    # --- pointer protocol (house pattern) ---------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> tuple[int, int | None]:
-        try:
-            with open(self._pointer_path()) as f:
-                try:
-                    meta = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the "
-                        "sample geometry (key_col, k) lives only in "
-                        "the pointer, so the state cannot be safely "
-                        "merged into. Restore the pointer from backup "
-                        "or rebuild in a fresh base_dir."
-                    ) from e
-            if "version" not in meta:
-                raise ValueError(
-                    f"corrupt {self._POINTER} pointer at {self.base_dir}"
-                    " (no 'version' field — truncated or foreign write);"
-                    " restore the pointer from backup or rebuild in a "
-                    "fresh base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            if (
-                meta.get("key_col"),
-                meta.get("k"),
-                meta.get("group_col"),
-            ) != (self.key_col, self.k, self.group_col):
-                raise ValueError(
-                    "sample geometry mismatch: state at "
-                    f"{self.base_dir} was built with key_col="
-                    f"{meta.get('key_col')!r}, k={meta.get('k')}, "
-                    f"group_col={meta.get('group_col')!r} but this "
-                    f"maintainer was opened with key_col={self.key_col!r}, "
-                    f"k={self.k}, group_col={self.group_col!r}; a "
-                    "different key changes every hash, a different k or "
-                    "stratification changes the sample contract. Reopen "
-                    "with the recorded geometry or rebuild in a fresh "
-                    "base_dir."
-                )
-            return int(meta["version"]), meta.get("last_batch_id")
-        except FileNotFoundError:
-            pass
-        # pointer lost with state dirs present: the merge itself is
-        # idempotent (bottom-k is a monoid), but the GEOMETRY guard
-        # above runs only against the pointer — adopting an orphaned
-        # dir under a different (key_col, k) would silently change
-        # every hash and the sample contract. Fail loudly (the
-        # Bm25Maintainer rule, extended per VERDICT r11 #7).
-        pat = re.compile(rf"^{self._STATE_NAME}_v(\d+)$")
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if pat.match(n)
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"sample maintainer state at {self.base_dir} has "
-                    f"committed sample dirs ({orphaned}) but no "
-                    f"{self._POINTER} pointer; the sample geometry "
-                    "(key_col, k) lives only in the pointer, so this "
-                    "state cannot be safely adopted. Restore the "
-                    "pointer from backup or rebuild in a fresh "
-                    "base_dir."
-                )
-        return 0, None
-
-    def _commit(self, version: int, batch_id: int | None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "key_col": self.key_col,
-                    "k": self.k,
-                    "group_col": self.group_col,
-                    "checkpoint_token": self._checkpoint_token,
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    @property
-    def version(self) -> int:
-        return self._version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+    def _geometry(self) -> dict:
+        # a different key changes every hash, a different k or
+        # stratification changes the sample contract
+        return {
+            "key_col": self.key_col,
+            "k": self.k,
+            "group_col": self.group_col,
+        }
 
     # --- maintenance ----------------------------------------------------
 
@@ -194,10 +97,7 @@ class SampleMaintainer:
         rows), commit. Bottom-k IS idempotent under re-merge, but the
         watermark keeps the version chain exactly-once like the
         siblings."""
-        if (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        ):
+        if self._already_merged(batch_id):
             return
         part = self._bottom_k(batch_df)
         cur = self.current()
@@ -206,13 +106,7 @@ class SampleMaintainer:
             if cur is None
             else self._bottom_k(part.unionByName(cur))
         )
-        nxt = self._version + 1
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.state_dir}_v{nxt}"
-        )
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
+        self._advance(merged.coalesce(1), batch_id)
 
     def sample(self) -> DataFrame:
         """The maintained k-row uniform sample of everything seen."""
@@ -220,65 +114,3 @@ class SampleMaintainer:
         if cur is None:
             raise ValueError("no batches merged yet")
         return cur
-
-    # --- streaming glue ---------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir`` into the sample."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def vacuum_versions(self, keep_last: int = 2) -> list[str]:
-        """Drop sample_v* dirs older than the last ``keep_last``
-        committed versions."""
-        import shutil
-
-        removed = []
-        pat = re.compile(
-            re.escape(os.path.basename(self.state_dir)) + r"_v(\d+)$"
-        )
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and int(m.group(1)) <= self._version - keep_last:
-                shutil.rmtree(os.path.join(self.base_dir, name))
-                removed.append(name)
-        return removed

@@ -37,22 +37,27 @@ extension a multimodal 100 TB ingest runs next to the MinHash index.
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedState,
+)
 
 
-class SemDeDupMaintainer:
+class SemDeDupMaintainer(VersionedState):
     """Maintain semantic near-dup pairs and duplicate-cluster labels of
     every embedding batch ingested so far, against centroids frozen at
     bootstrap."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "semdedup"
+    _ORPHANS = (
+        "vectors_b*/_SUCCESS",
+        "pairs_b*/_SUCCESS",
+        "centroids/_SUCCESS",
+    )
 
     def __init__(
         self,
@@ -64,16 +69,12 @@ class SemDeDupMaintainer:
         threshold: float = 0.4,
         dim: int | None = None,
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.id_col = id_col
         self.vec_col = vec_col
         self.num_centroids = int(num_centroids)
         self.threshold = float(threshold)
         self.dim = int(dim) if dim is not None else None
-        os.makedirs(base_dir, exist_ok=True)
-        self._checkpoint_token: str | None = None
-        self._meta = self._recover()
+        self._open(spark, base_dir, version=0, batches=[], bootstrapped=False)
         from _data_engineering_pipeline_project_spark.streaming.clustermaint import (
             ClusterMaintainer,
         )
@@ -81,8 +82,6 @@ class SemDeDupMaintainer:
         self._cc = ClusterMaintainer(
             spark, os.path.join(base_dir, "clusters"), "vec_a", "vec_b"
         )
-
-    # --- pointer protocol (house pattern) ---------------------------------
 
     def _geometry(self) -> dict:
         return {
@@ -92,84 +91,6 @@ class SemDeDupMaintainer:
             "threshold": self.threshold,
             "dim": self.dim,
         }
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover(self) -> dict:
-        try:
-            with open(self._pointer_path()) as f:
-                try:
-                    meta = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"corrupt {self._POINTER} pointer at "
-                        f"{self.base_dir} (invalid JSON: {e}); the index "
-                        "geometry and batch manifest live only in the "
-                        "pointer. Restore it from backup or rebuild in a "
-                        "fresh base_dir."
-                    ) from e
-            if "version" not in meta or "batches" not in meta:
-                raise ValueError(
-                    f"corrupt {self._POINTER} pointer at {self.base_dir}"
-                    " (missing 'version'/'batches' — truncated or foreign"
-                    " write); restore it from backup or rebuild in a fresh"
-                    " base_dir."
-                )
-            want = self._geometry()
-            got = {k: meta.get(k) for k in want}
-            if got != want:
-                raise ValueError(
-                    "semdedup geometry mismatch: state at "
-                    f"{self.base_dir} was built with {got} but this "
-                    f"maintainer was opened with {want}; frozen centroids "
-                    "and stored assignments are only valid under the "
-                    "recorded geometry. Reopen with it or rebuild in a "
-                    "fresh base_dir."
-                )
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return meta
-        except FileNotFoundError:
-            pass
-        if os.path.isdir(self.base_dir):
-            orphaned = sorted(
-                n
-                for n in os.listdir(self.base_dir)
-                if re.match(r"^(vectors|pairs)_b\d+$|^centroids$", n)
-                and os.path.exists(os.path.join(self.base_dir, n, "_SUCCESS"))
-            )
-            if orphaned:
-                raise ValueError(
-                    f"semdedup state at {self.base_dir} has committed "
-                    f"dirs ({orphaned}) but no {self._POINTER} pointer; "
-                    "the geometry and batch manifest live only in the "
-                    "pointer, so this state cannot be safely adopted. "
-                    "Restore the pointer from backup or rebuild in a "
-                    "fresh base_dir."
-                )
-        return {
-            "version": 0,
-            "last_batch_id": None,
-            "batches": [],
-            "bootstrapped": False,
-            **self._geometry(),
-        }
-
-    def _commit(self, meta: dict) -> None:
-        meta = {**meta, "checkpoint_token": self._checkpoint_token}
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-        self._meta = meta
-
-    @property
-    def version(self) -> int:
-        return int(self._meta["version"])
-
-    # --- bootstrap ----------------------------------------------------------
 
     def bootstrap(self, seed_corpus: DataFrame) -> None:
         """Freeze the centroid set: the one-shot's deterministic seeds
@@ -194,7 +115,7 @@ class SemDeDupMaintainer:
         cent.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self.base_dir, "centroids")
         )
-        self._commit({**self._meta, "bootstrapped": True})
+        self._commit(bootstrapped=True)
 
     def centroids(self) -> DataFrame:
         if not self._meta.get("bootstrapped"):
@@ -257,8 +178,7 @@ class SemDeDupMaintainer:
         meta = self._meta
         if not meta.get("bootstrapped"):
             raise ValueError("bootstrap() the centroid set first")
-        last = meta.get("last_batch_id")
-        if last is not None and batch_id <= last:
+        if self._already_merged(batch_id):
             return
         from _data_engineering_pipeline_project_spark.functions.vectors import (
             l2_norm,
@@ -352,55 +272,7 @@ class SemDeDupMaintainer:
             batch_id,
         )
         self._commit(
-            {
-                **meta,
-                "version": int(meta["version"]) + 1,
-                "last_batch_id": batch_id,
-                "batches": [*meta["batches"], batch_id],
-            }
+            version=int(meta["version"]) + 1,
+            last_batch_id=batch_id,
+            batches=[*meta["batches"], batch_id],
         )
-    # --- streaming glue -----------------------------------------------------
-
-    def bind_checkpoint(self, token: str) -> None:
-        if self._checkpoint_token is None:
-            self._checkpoint_token = token
-            return
-        if self._checkpoint_token != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was "
-                f"built under checkpoint {self._checkpoint_token!r} but "
-                f"this run uses {token!r}. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df: DataFrame, batch_id: int) -> None:
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType | str,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new embedding files from ``source_dir`` into the index."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()

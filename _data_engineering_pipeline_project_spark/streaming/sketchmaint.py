@@ -13,32 +13,31 @@ sketch over all data ever seen (pinned in tests: time-mergeability is
 the same property as the partition-mergeability the batch operator
 pins).
 
-Storage follows the AggMaintainer/Scd2Table versioned-dir + atomic
-pointer protocol; with Delta/Iceberg this is a MERGE INTO on the state
-table.
+Storage follows the versioned-state protocol (``streaming/versioned.py``);
+with Delta/Iceberg this is a MERGE INTO on the state table. A lost
+pointer fails loudly: histogram bin counts double under the redelivery
+that would follow adoption.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from _data_engineering_pipeline_project_spark.operators.sketches import (
     _HASH_SPACE,
     _hash60,
 )
+from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    VersionedDirs,
+)
 
 
-class KmvMaintainer:
+class KmvMaintainer(VersionedDirs):
     """Maintain a per-group KMV distinct sketch of ``value_col`` across
     micro-batches."""
 
-    _POINTER = "_CURRENT"
+    _KIND = "KMV sketch"
     _STATE_NAME = "kmv"
 
     def __init__(
@@ -49,71 +48,10 @@ class KmvMaintainer:
         value_col: str,
         k: int = 64,
     ):
-        self.spark = spark
-        self.base_dir = base_dir
         self.group_col = group_col
         self.value_col = value_col
         self.k = k
-        self.state_dir = os.path.join(base_dir, "kmv")
-        os.makedirs(base_dir, exist_ok=True)
-        self._version, self._last_batch_id = self._recover_version()
-
-    # --- versioned-state plumbing (Scd2Table protocol) -------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.base_dir, self._POINTER)
-
-    def _recover_version(self) -> tuple[int, int | None]:
-        if os.path.exists(self._pointer_path()):
-            with open(self._pointer_path()) as f:
-                meta = json.load(f)
-            self._checkpoint_token = meta.get("checkpoint_token")
-            return int(meta["version"]), meta.get("last_batch_id")
-        best = 0
-        pat = re.compile(rf"^{type(self)._STATE_NAME}_v(\d+)$")
-        for name in os.listdir(self.base_dir):
-            m = pat.match(name)
-            if m and os.path.exists(
-                os.path.join(self.base_dir, name, "_SUCCESS")
-            ):
-                best = max(best, int(m.group(1)))
-        return best, None
-
-    def _commit(self, version: int, batch_id: int | None = None) -> None:
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "last_batch_id": batch_id,
-                    "checkpoint_token": getattr(
-                        self, "_checkpoint_token", None
-                    ),
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._pointer_path())
-
-    def _already_merged(self, batch_id: int) -> bool:
-        """foreachBatch is at-least-once: a retried/re-delivered batch id
-        at or below the committed watermark must be a no-op (counts are
-        not idempotent under re-merge; KMV technically is, but the guard
-        keeps both maintainers exactly-once by construction)."""
-        return (
-            self._last_batch_id is not None
-            and batch_id <= self._last_batch_id
-        )
-
-    @property
-    def version(self) -> int:
-        return self._version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+        self._open(spark, base_dir)
 
     # --- sketch maintenance ----------------------------------------------
 
@@ -146,11 +84,7 @@ class KmvMaintainer:
             .filter(F.col("rn") <= self.k)
             .select("g", "h")
         )
-        nxt = self._version + 1
-        topk.write.mode("overwrite").parquet(f"{self.state_dir}_v{nxt}")
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
+        self._advance(topk, batch_id)
 
     def estimates(self) -> DataFrame:
         """(group, n_kmv, est_distinct) from the maintained state — the
@@ -179,68 +113,7 @@ class KmvMaintainer:
         )
 
 
-    def bind_checkpoint(self, token: str) -> None:
-        """Guard against a silent streaming-checkpoint reset: foreachBatch
-        ids restart at 0 when the checkpoint dir is recreated, and the
-        last_batch_id watermark would then absorb real data as
-        "redelivery" (code-review r3). The pointer records which
-        checkpoint the watermark belongs to; a DIFFERENT checkpoint must
-        fail loudly — the operator either restores the checkpoint or
-        starts a fresh maintainer base_dir. A maintainer with no recorded
-        token (pre-guard pointer, or direct merge_batch use in tests)
-        adopts the first token offered."""
-        stored = getattr(self, "_checkpoint_token", None)
-        if stored is None:
-            self._checkpoint_token = token
-            return
-        if stored != token:
-            raise ValueError(
-                "streaming checkpoint mismatch: maintainer state was built "
-                f"under checkpoint {stored!r} but this run uses {token!r}; "
-                "batch ids would restart and the redelivery watermark "
-                "would silently drop data. Restore the original "
-                "checkpoint or start a new maintainer base_dir."
-            )
-
-    def _guarded_hook(self, checkpoint_dir: str):
-        """foreachBatch wrapper: resolve the checkpoint IDENTITY (the
-        query id in <checkpoint>/metadata — it exists only after the
-        query starts) and bind it before delegating; a recreated
-        checkpoint at the same path gets a new id and fails loudly."""
-        from _data_engineering_pipeline_project_spark.streaming.ckptid import (
-            checkpoint_identity,
-        )
-
-        def hook(batch_df, batch_id):
-            self.bind_checkpoint(checkpoint_identity(checkpoint_dir))
-            self.merge_batch(batch_df, batch_id)
-
-        return hook
-
-    def run_available_now(
-        self,
-        source_dir: str,
-        schema: T.StructType,
-        checkpoint_dir: str,
-        source_format: str = "parquet",
-    ) -> None:
-        """Drain new files from ``source_dir``, maintaining the sketch;
-        the checkpoint makes file discovery exactly-once per batch."""
-        stream = (
-            self.spark.readStream.format(source_format)
-            .schema(schema)
-            .load(source_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self._guarded_hook(checkpoint_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
-class HistogramMaintainer:
+class HistogramMaintainer(VersionedDirs):
     """Maintain per-group fixed-range bin counts across micro-batches;
     quantiles derive at read time.
 
@@ -254,7 +127,7 @@ class HistogramMaintainer:
     still never a rescan of history.
     """
 
-    _POINTER = "_CURRENT"
+    _KIND = "histogram"
     _STATE_NAME = "hist"
 
     def __init__(
@@ -269,30 +142,12 @@ class HistogramMaintainer:
     ):
         if not hi > lo:
             raise ValueError("hi must exceed lo")
-        self.spark = spark
-        self.base_dir = base_dir
         self.group_col = group_col
         self.value_col = value_col
         self.lo = float(lo)
         self.hi = float(hi)
         self.bins = bins
-        self.state_dir = os.path.join(base_dir, "hist")
-        os.makedirs(base_dir, exist_ok=True)
-        self._version, self._last_batch_id = self._recover_version()
-
-    _pointer_path = KmvMaintainer._pointer_path
-    _commit = KmvMaintainer._commit
-    _recover_version = KmvMaintainer._recover_version
-    _already_merged = KmvMaintainer._already_merged
-
-    @property
-    def version(self) -> int:
-        return self._version
-
-    def current(self) -> DataFrame | None:
-        if self._version == 0:
-            return None
-        return self.spark.read.parquet(f"{self.state_dir}_v{self._version}")
+        self._open(spark, base_dir)
 
     def _batch_hist(self, batch_df: DataFrame) -> DataFrame:
         width = (self.hi - self.lo) / float(self.bins)
@@ -323,11 +178,7 @@ class HistogramMaintainer:
             .groupBy("g", "bin")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        nxt = self._version + 1
-        merged.write.mode("overwrite").parquet(f"{self.state_dir}_v{nxt}")
-        self._commit(nxt, batch_id)
-        self._version = nxt
-        self._last_batch_id = batch_id
+        self._advance(merged, batch_id)
 
     def quantiles(self, probs: tuple = (0.5, 0.9, 0.99)) -> DataFrame:
         """(group, p, quantile_est) from the maintained counts — same

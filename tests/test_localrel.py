@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import Row
 
 from _data_engineering_pipeline_project_spark.functions.localrel import (
@@ -60,3 +61,12 @@ def test_timestamp_schema_falls_back_to_classic(spark):
     got = local_df(spark, [(ts, "x")], "t timestamp, s string")
     want = spark.createDataFrame([(ts, "x")], "t timestamp, s string")
     assert got.collect() == want.collect()
+
+
+def test_every_row_width_is_checked(spark):
+    # a LATER row wider (or narrower) than the schema must fail loudly,
+    # not be truncated by the column transpose, with local_df's own
+    # message rather than whatever the classic fallback raises
+    for bad in ([("a", 1), ("b", 2, "extra")], [("a", 1), ("b",)]):
+        with pytest.raises(ValueError, match="row 1 has"):
+            local_df(spark, bad, "s string, i int")
