@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from _data_engineering_pipeline_project_spark import memo
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -59,19 +61,6 @@ def load_dir(
 _NANOS_TS_COLS = {"events": ("ts",)}
 
 
-# plan memo, NOT a data cache (r13 optimization): `spark.read.parquet`
-# re-lists the path and re-reads parquet footers for schema inference on
-# EVERY call (~75 ms measured) — ~200+ calls per bench run, all over the
-# same immutable inputs. Memoizing the LAZY DataFrame reuses the resolved
-# file index + schema the way a catalog table's metastore entry does
-# (guide §6 endorses file-listing caches); every action still scans the
-# parquet files from disk — no rows are cached anywhere. The key carries
-# the path's mtime, so an in-session overwrite (which writes new files
-# and bumps the directory mtime) misses the memo and re-resolves.
-_TABLE_MEMO: dict = {}
-_TABLE_MEMO_MAX = 256  # bound (ADVICE r13): drop oldest past this
-
-
 def _mtime_key(path: str) -> float:
     """Directory mtime PLUS the max top-level child mtime (ADVICE r13:
     an in-place rewrite of an existing part file keeps its filename and
@@ -89,6 +78,16 @@ def _mtime_key(path: str) -> float:
     return m
 
 
+# plan memo, NOT a data cache (r13 optimization): `spark.read.parquet`
+# re-lists the path and re-reads parquet footers for schema inference on
+# EVERY call (~75 ms measured) — ~200+ calls per bench run, all over the
+# same immutable inputs. Memoizing the LAZY DataFrame (in the session
+# memo, memo.py) reuses the resolved file index + schema the way a
+# catalog table's metastore entry does (guide §6 endorses file-listing
+# caches); every action still scans the parquet files from disk — no
+# rows are cached anywhere. The key carries the path's mtime, so an
+# in-session overwrite (which writes new files and bumps the directory
+# mtime) misses the memo and re-resolves.
 def table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     path = os.path.join(data_dir, f"{name}.parquet")
     # engine invariant: timestamp semantics are UTC (oracle parity) — the
@@ -99,26 +98,17 @@ def table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     if nanos_cols:
         # runtime-settable; harmless for non-nanos files
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        # keyed on the SESSION object, not applicationId alone (ADVICE
-        # r13: a sibling spark.newSession() shares the applicationId but
-        # must not be handed a DataFrame bound to another session)
-        key = (
-            spark,
-            os.path.abspath(path),
-            _mtime_key(path),
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _TABLE_MEMO:
-        return _TABLE_MEMO[key]
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        if isinstance(df.schema[c].dataType, T.LongType):
-            # integer div — float division loses precision at 1e18 nanos
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-    if key is not None:
-        while len(_TABLE_MEMO) >= _TABLE_MEMO_MAX:
-            _TABLE_MEMO.pop(next(iter(_TABLE_MEMO)))
-        _TABLE_MEMO[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        for c in nanos_cols:
+            if isinstance(df.schema[c].dataType, T.LongType):
+                # integer div — float division loses precision at 1e18 nanos
+                df = df.withColumn(
+                    c, F.timestamp_micros(F.expr(f"{c} div 1000"))
+                )
+        return df
+
+    return memo.get(
+        spark, lambda: ("table", os.path.abspath(path), _mtime_key(path)), build
+    )

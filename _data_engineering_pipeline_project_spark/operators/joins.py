@@ -83,16 +83,22 @@ def snapshot_diff(
     joined = inc.join(ex, cond, "full_outer")
     inc_present = F.col(f"inc.{pk[0]}").isNotNull()
     ex_present = F.col(f"ex.{pk[0]}").isNotNull()
+    deleted = ~inc_present & ex_present
     change = (
         F.when(inc_present & ~ex_present, F.lit("insert"))
-        .when(~inc_present & ex_present, F.lit("delete"))
+        .when(deleted, F.lit("delete"))
         .when(row_differs("inc", "ex", compare_cols), F.lit("update"))
         .otherwise(F.lit("unchanged"))
     )
-    cols = [
-        F.coalesce(F.col(f"inc.{c}"), F.col(f"ex.{c}")).alias(c)
-        if c in set(existing.columns)
-        else F.col(f"inc.{c}").alias(c)
-        for c in incoming.columns
-    ]
+    ex_cols = set(existing.columns)
+
+    def value(c: str):
+        # keys coalesce; any other column is the incoming side's unless
+        # the key left it, so an update to NULL stays NULL
+        new, old = F.col(f"inc.{c}"), F.col(f"ex.{c}")
+        if c in pk:
+            return F.coalesce(new, old)
+        return F.when(deleted, old).otherwise(new) if c in ex_cols else new
+
+    cols = [value(c).alias(c) for c in incoming.columns]
     return joined.select(*cols, change.alias("change_type"))

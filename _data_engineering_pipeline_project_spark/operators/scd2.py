@@ -147,9 +147,9 @@ def scd2_merge(
 
     # --- next snapshot: one row per joined row --------------------------
     def new_value(c: str):
+        # an update takes the incoming value even when it is NULL
         return (
-            F.when(ct == "insert", F.col(c))
-            .when(ct == "update", F.coalesce(F.col(c), F.col(f"__old_{c}")))
+            F.when(ct.isin("insert", "update"), F.col(c))
             .otherwise(F.col(f"__old_{c}"))
             .alias(c)
         )

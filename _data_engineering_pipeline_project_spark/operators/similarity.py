@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from _data_engineering_pipeline_project_spark import memo
 from _data_engineering_pipeline_project_spark.functions.cachetrack import (
     note_query_cache,
 )
@@ -906,28 +907,16 @@ def _subspaces(df: DataFrame, vec_col, out_col: str, m: int, sub_dim: int):
     ).drop(vec_col)
 
 
-# (applicationId, corpus-plan semanticHash, m, sub_dim, ksub, id, vec)
-# → (pinned codebooks, pinned codes). The codebook training (TakeOrdered
+# (session, corpus-plan semanticHash, m, sub_dim, ksub, id, vec)
+# → (codebooks, codes). The codebook training (TakeOrdered
 # seed scan) and the corpus encode are IDENTICAL computations for every
 # PQ-family query over the same corpus+params — pq_adc_topk and
 # ivfpq_topk each rebuilt both (2-3 s each at sf0.1). Memoizing the
-# PINNED frames is exactly "build the PQ index once per session": a
+# index is exactly "build the PQ index once per session": a
 # production vector store persists codebooks+codes as the index
 # artifact (cf. streaming/annmaint.py for the incremental form); the
 # codes frame is corpus×m rows — the same bytes the stored index
-# occupies. Checkpoint-pinned (functions/persist.py), so it survives
-# clearCache and, with a checkpoint dir configured, executor loss.
-_PQ_INDEX_MEMO: dict = {}
-
-
-def clear_pq_index_memo() -> None:
-    import shutil
-
-    for _cb, _codes, tmpdir in _PQ_INDEX_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _PQ_INDEX_MEMO.clear()
-
-
+# occupies.
 def pq_index_shared(
     corpus: DataFrame,
     m: int,
@@ -936,9 +925,9 @@ def pq_index_shared(
     id_col: str,
     vec_col: str,
 ) -> tuple:
-    """Session-memoized (codebooks, codes) for a corpus+params — see
-    ``_PQ_INDEX_MEMO``. Falls back to building fresh on any failure to
-    fingerprint the corpus plan.
+    """Session-memoized (codebooks, codes) for a corpus+params
+    (``memo.py``). A corpus whose plan cannot be fingerprinted is built
+    fresh; its tempdir is still released with the memo.
 
     r14 (VERDICT r13 #5): the memoized frames are parquet artifacts
     (write once, read back with the known schema) instead of
@@ -947,10 +936,12 @@ def pq_index_shared(
     the block manager for the session, and the artifact survives
     executor loss (localCheckpoint blocks do not) — it IS
     ``save_pq_index``'s production form, kept in a session tempdir."""
+    import shutil
     import tempfile
 
-    try:
-        plan_key = corpus._jdf.queryExecution().analyzed().semanticHash()
+    spark = corpus.sparkSession
+
+    def key() -> tuple:
         # the plan hash alone is UNCHANGED when the underlying parquet
         # path is overwritten or appended to in-session (ADVICE r8 #4 —
         # stale codebooks would be served for the new data), so mix in
@@ -960,36 +951,30 @@ def pq_index_shared(
         # the plan). Non-file corpora hash to the empty tuple — for
         # those the memo still assumes an immutable plan, which holds
         # for every in-repo caller (all read parquet).
-        files_key = hash(tuple(sorted(corpus.inputFiles())))
-        key = (
-            corpus.sparkSession.sparkContext.applicationId,
-            plan_key,
-            files_key,
+        return (
+            "pq_index",
+            corpus._jdf.queryExecution().analyzed().semanticHash(),
+            hash(tuple(sorted(corpus.inputFiles()))),
             m,
             sub_dim,
             ksub,
             id_col,
             vec_col,
         )
-    except Exception:
-        key = None
-    if key is not None and key in _PQ_INDEX_MEMO:
-        got = _PQ_INDEX_MEMO[key]
-        return got[0], got[1]
-    spark = corpus.sparkSession
-    tmpdir = tempfile.mkdtemp(prefix="pq_index_")
-    cb0 = pq_codebooks(corpus, m, sub_dim, ksub, id_col, vec_col)
-    cb0.write.mode("overwrite").parquet(f"{tmpdir}/codebooks")
-    cb = spark.read.schema(cb0.schema).parquet(f"{tmpdir}/codebooks")
-    codes0 = pq_encode(corpus, cb, m, sub_dim, id_col, vec_col)
-    codes0.write.mode("overwrite").parquet(f"{tmpdir}/codes")
-    codes = spark.read.schema(codes0.schema).parquet(f"{tmpdir}/codes")
-    if key is not None:
-        _PQ_INDEX_MEMO[key] = (cb, codes, tmpdir)
-    else:
-        # unmemoized artifacts cannot be evicted later — leave them to
-        # the tempdir reaper rather than tracking them
-        pass
+
+    def build() -> tuple:
+        tmpdir = tempfile.mkdtemp(prefix="pq_index_")
+        cb0 = pq_codebooks(corpus, m, sub_dim, ksub, id_col, vec_col)
+        cb0.write.mode("overwrite").parquet(f"{tmpdir}/codebooks")
+        cb = spark.read.schema(cb0.schema).parquet(f"{tmpdir}/codebooks")
+        codes0 = pq_encode(corpus, cb, m, sub_dim, id_col, vec_col)
+        codes0.write.mode("overwrite").parquet(f"{tmpdir}/codes")
+        codes = spark.read.schema(codes0.schema).parquet(f"{tmpdir}/codes")
+        return cb, codes, tmpdir
+
+    cb, codes, _tmpdir = memo.get(
+        spark, key, build, lambda v: shutil.rmtree(v[2], ignore_errors=True)
+    )
     return cb, codes
 
 

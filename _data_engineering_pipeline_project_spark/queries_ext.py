@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _data_engineering_pipeline_project_spark import memo
 from _data_engineering_pipeline_project_spark.catalog import table
 from _data_engineering_pipeline_project_spark.multimodal.binary import (
     attach_binary_payload,
@@ -394,20 +395,6 @@ def minhash_lsh_near_dup_documents(spark: SparkSession, sf: str) -> DataFrame:
     return _minhash_pairs_shared(spark, sf)
 
 
-# verified near-dup pairs are consumed by BOTH minhash_lsh_near_dup_documents
-# and corpus_curation_pipeline; memoize the cached frame per (session, sf) so
-# a run that executes both pays for signatures + banding + verify ONCE
-# (VERDICT r1 'Next' #7 — the composite previously recomputed the whole
-# MinHash stage). Keyed on applicationId, not id(spark): CPython reuses
-# object addresses, so an id() key can alias a dead session's cache entry
-# (ADVICE r2). applicationId is unique per SparkSession lifetime.
-_MINHASH_PAIRS_CACHE: dict = {}
-
-
-def _session_key(spark: SparkSession, sf: str) -> tuple:
-    return (spark.sparkContext.applicationId, sf)
-
-
 # Per-CALL .cache() frames used inside single queries (item-item cosine,
 # market basket, triangle counting, Fellegi-Sunter, Kaplan-Meier, RFM):
 # the cache must stay alive until the DRIVER collects the (lazy) result,
@@ -466,63 +453,10 @@ def track_query_caches(
 
 
 def clear_query_caches() -> None:
-    """Eviction hook for the per-session memo caches: free every pair
-    frame's checkpoint storage (best-effort — the owning session may
-    already be stopped) and drop all entries, including BPE
-    vocabularies and per-call cached intermediates."""
-    from _data_engineering_pipeline_project_spark.operators.dedup import (
-        _free_local_checkpoint,
-    )
-
-    for df in _MINHASH_PAIRS_CACHE.values():
-        try:
-            _free_local_checkpoint(df)
-        except Exception:
-            pass
-    for df in _SHINGLE_TABLE_CACHE.values():
-        try:
-            _free_local_checkpoint(df)
-        except Exception:
-            pass
-    _MINHASH_PAIRS_CACHE.clear()
-    _SHINGLE_TABLE_CACHE.clear()
-    _CC_LABELS_CACHE.clear()  # checkpointed RDDs free on GC of the frames
-    _BPE_MERGES_CACHE.clear()
-    from _data_engineering_pipeline_project_spark.operators.similarity import (
-        clear_pq_index_memo,
-    )
-
-    clear_pq_index_memo()
-    from _data_engineering_pipeline_project_spark.queries_ext11 import (
-        clear_opq_memo,
-    )
-
-    clear_opq_memo()
-    from _data_engineering_pipeline_project_spark.queries_ext12 import (
-        clear_cluster_maint_memo,
-        clear_neardup_maint_memo,
-        clear_panel_maint_memo,
-        clear_semdedup_maint_memo,
-    )
-
-    clear_cluster_maint_memo()
-    clear_neardup_maint_memo()
-    clear_panel_maint_memo()
-    clear_semdedup_maint_memo()
-    from _data_engineering_pipeline_project_spark.queries_ext13 import (
-        clear_bm25_maint_memo,
-        clear_cov_maint_memo,
-        clear_rag_bm25_maint_memo,
-    )
-
-    clear_bm25_maint_memo()
-    clear_rag_bm25_maint_memo()
-    clear_cov_maint_memo()
-    from _data_engineering_pipeline_project_spark.queries_ext13 import (
-        clear_drift_maint_memo,
-    )
-
-    clear_drift_maint_memo()
+    """Drop every session-memo entry (running its release: tempdirs,
+    checkpoint storage) and every query's per-call cached intermediates
+    (best-effort — the owning session may already be stopped)."""
+    memo.clear()
     for frames in _QUERY_LOCAL_CACHES.values():
         for df in frames:
             try:
@@ -538,54 +472,55 @@ def clear_query_caches() -> None:
 # stages — each previously exploded its own copy. Pinned, so it
 # survives clearCache between bench queries; ~13 shingle rows/doc, far
 # smaller than the corpus text it replaces in every downstream scan.
-_SHINGLE_TABLE_CACHE: dict = {}
-
-
 def shingle_table_shared(spark: SparkSession, sf: str) -> DataFrame:
     from _data_engineering_pipeline_project_spark.functions.persist import (
         pinned_checkpoint,
     )
 
-    key = _session_key(spark, sf)
-    got = _SHINGLE_TABLE_CACHE.get(key)
-    if got is None:
-        got = pinned_checkpoint(
+    return memo.get(
+        spark,
+        ("shingles", sf),
+        lambda: pinned_checkpoint(
             D._shingle_table(table(spark, sf, "documents"), "doc_id", "text", 3)
-        )
-        _SHINGLE_TABLE_CACHE[key] = got
-    return got
+        ),
+        D._free_local_checkpoint,
+    )
 
 
+# verified near-dup pairs are consumed by BOTH minhash_lsh_near_dup_documents
+# and corpus_curation_pipeline; memoized per (session, sf) so a run that
+# executes both pays for signatures + banding + verify ONCE (VERDICT r1
+# 'Next' #7 — the composite previously recomputed the whole MinHash stage).
 def _minhash_pairs_shared(spark: SparkSession, sf: str) -> DataFrame:
-    key = _session_key(spark, sf)
-    got = _MINHASH_PAIRS_CACHE.get(key)
-    if got is None:
-        # checkpoint, not cache+count (VERDICT r6 #1): both pin the
-        # signatures+banding+verify pipeline to ONE execution per
-        # (session, sf), but a cache entry lives in the CacheManager —
-        # a later ``spark.catalog.clearCache()`` silently evicts it
-        # while the memo still hands the frame out, and every consumer
-        # (CC symmetrizes it into a 2-way union) then re-runs the whole
-        # uncached pipeline. The checkpoint pins the MATERIALIZED RDD
-        # into the plan itself: consumers scan stored blocks no matter
-        # what happens to the cache manager. Eager — the memo never
-        # stores an unmaterialized frame. Reliable when a checkpoint
-        # dir is configured (ADVICE r7 #2: unreplicated localCheckpoint
-        # blocks make an executor loss fatal to every later consumer on
-        # a real cluster), local otherwise — functions/persist.py.
-        from _data_engineering_pipeline_project_spark.functions.persist import (
-            pinned_checkpoint,
-        )
+    # checkpoint, not cache+count (VERDICT r6 #1): both pin the
+    # signatures+banding+verify pipeline to ONE execution per
+    # (session, sf), but a cache entry lives in the CacheManager —
+    # a later ``spark.catalog.clearCache()`` silently evicts it
+    # while the memo still hands the frame out, and every consumer
+    # (CC symmetrizes it into a 2-way union) then re-runs the whole
+    # uncached pipeline. The checkpoint pins the MATERIALIZED RDD
+    # into the plan itself: consumers scan stored blocks no matter
+    # what happens to the cache manager. Eager — the memo never
+    # stores an unmaterialized frame. Reliable when a checkpoint
+    # dir is configured (ADVICE r7 #2: unreplicated localCheckpoint
+    # blocks make an executor loss fatal to every later consumer on
+    # a real cluster), local otherwise — functions/persist.py.
+    from _data_engineering_pipeline_project_spark.functions.persist import (
+        pinned_checkpoint,
+    )
 
-        got = pinned_checkpoint(
+    return memo.get(
+        spark,
+        ("minhash_pairs", sf),
+        lambda: pinned_checkpoint(
             D.minhash_near_dup_pairs(
                 table(spark, sf, "documents"),
                 threshold=0.3,
                 shingle_table=shingle_table_shared(spark, sf),
             )
-        )
-        _MINHASH_PAIRS_CACHE[key] = got
-    return got
+        ),
+        D._free_local_checkpoint,
+    )
 
 
 # connected-component labels over the shared pair graph, memoized beside
@@ -593,16 +528,12 @@ def _minhash_pairs_shared(spark: SparkSession, sf: str) -> DataFrame:
 # dedup_clusters_documents and dedup_cluster_representatives. The frame
 # connected_components returns is localCheckpoint-ed, so the memo hands
 # back an already-materialized RDD rather than re-running the iteration.
-_CC_LABELS_CACHE: dict = {}
-
-
 def _cc_labels_shared(spark: SparkSession, sf: str) -> DataFrame:
-    key = _session_key(spark, sf)
-    got = _CC_LABELS_CACHE.get(key)
-    if got is None:
-        got = D.connected_components(_minhash_pairs_shared(spark, sf))
-        _CC_LABELS_CACHE[key] = got
-    return got
+    return memo.get(
+        spark,
+        ("cc_labels", sf),
+        lambda: D.connected_components(_minhash_pairs_shared(spark, sf)),
+    )
 
 
 _MINHASH_PAIRS_CTES = f"""
@@ -1150,22 +1081,18 @@ def chunk_documents_overlap(spark: SparkSession, sf: str) -> DataFrame:
 # BPE vocabulary trained once per (session, sf) on a deterministic
 # 50-doc sample and shared by every BPE query (functions/bpe.py) — the
 # same memo shape as the MinHash pair frame above
-_BPE_MERGES_CACHE: dict = {}
-
-
 def _bpe_merges_shared(spark: SparkSession, sf: str):
     from _data_engineering_pipeline_project_spark.functions.bpe import (
         train_bpe_on_documents,
     )
 
-    key = _session_key(spark, sf)
-    got = _BPE_MERGES_CACHE.get(key)
-    if got is None:
-        got = train_bpe_on_documents(
+    return memo.get(
+        spark,
+        ("bpe_merges", sf),
+        lambda: train_bpe_on_documents(
             table(spark, sf, "documents"), sample_docs=50, num_merges=200
-        )
-        _BPE_MERGES_CACHE[key] = got
-    return got
+        ),
+    )
 
 
 @query("bpe_token_counts_documents")  # rows-only: BPE is not SQL-expressible

@@ -51,11 +51,13 @@ reservoir-sampling replacement, statically oracled).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _data_engineering_pipeline_project_spark import memo
 from _data_engineering_pipeline_project_spark.catalog import table
 from _data_engineering_pipeline_project_spark.queries import query
 
@@ -71,11 +73,10 @@ _ORACLE_SF_DIR = os.environ.get(
 )
 
 
-# resolver-side memo: the deferred oracles (retrieval, balance,
-# ivf-opq, scree) share one model derivation per (path, geometry)
-_DUCK_MODEL_MEMO: dict = {}
-
-
+# resolver-side, process-level (no Spark session involved): the
+# deferred oracles (retrieval, balance, ivf-opq, scree) share one model
+# derivation per (path, geometry)
+@functools.cache
 def pca_model_duckdb(emb_path: str, dim: int = _OPQ_DIM) -> dict:
     """Re-derive the RAW (descending-eigenvalue) PCA model WITHOUT
     Spark: DuckDB computes the exact integer-lane covariance + mean
@@ -90,9 +91,6 @@ def pca_model_duckdb(emb_path: str, dim: int = _OPQ_DIM) -> dict:
     import duckdb
     import numpy as np
 
-    memo_key = (emb_path, dim)
-    if memo_key in _DUCK_MODEL_MEMO:
-        return _DUCK_MODEL_MEMO[memo_key]
     con = duckdb.connect()
     vq = (
         "SELECT list_transform(CAST(embedding AS DOUBLE[]), "
@@ -140,7 +138,6 @@ def pca_model_duckdb(emb_path: str, dim: int = _OPQ_DIM) -> dict:
         "mean": [mm for _, mm in mean_rows],
         "dim": dim,
     }
-    _DUCK_MODEL_MEMO[memo_key] = model
     return model
 
 
@@ -251,49 +248,18 @@ def _opq_sql() -> str:
 """
 
 
-# per-(app, sf, files) memo for the fitted model AND the pinned rotated
-# corpus: bench loops and repeated serving calls must not re-run the
-# covariance job or re-project — the same train-once economics as the
-# PQ index memo (similarity.py). The pin also gives the two PQ passes
-# (codebook seed scan, encode scan) materialized rows instead of two
-# Python-worker projection runs, and keeps the PQ index memo hitting
-# across calls (its key is the corpus plan — the same frame object
-# yields the same plan).
-_OPQ_ROT_MEMO: dict = {}
+def _embeddings_key(spark: SparkSession, sf: str, name: str):
+    """Memo key of ``name`` over this sf's embeddings: the data dir plus
+    the resolved file listing, so an in-session rewrite misses."""
+    emb = table(spark, sf, "embeddings")
+    return lambda: (name, sf, hash(tuple(sorted(emb.inputFiles()))))
 
 
-def clear_opq_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``):
-    free each memoized rotated corpus's checkpoint storage and drop
-    the entries — the PQ memo's lifecycle, applied to the OPQ layer.
-    Also drops the maintained IVF-OPQ index memo (its on-disk state
-    under the session temp dir is removed with it)."""
-    import shutil
-
-    from _data_engineering_pipeline_project_spark.operators.dedup import (
-        _free_local_checkpoint,
-    )
-
-    for _model, rot in _OPQ_ROT_MEMO.values():
-        try:
-            _free_local_checkpoint(rot)
-        except Exception:
-            pass
-    _OPQ_ROT_MEMO.clear()
-    _OPQ_MODEL_MEMO.clear()
-    for _mnt, tmpdir in _IVFOPQ_MAINT_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _IVFOPQ_MAINT_MEMO.clear()
-
-
-# session memo: ONE maintained IVF-OPQ index per (app, sf, fileset) —
+# session memo: ONE maintained IVF-OPQ index per (session, sf, fileset) —
 # the registered query serves the maintainer's artifacts (VERDICT r11
 # #1 / top_next) instead of a per-call recompute; bench loops and
 # repeated serving calls hit the bootstrapped index warm, exactly the
 # train-once economics a deployed store has
-_IVFOPQ_MAINT_MEMO: dict = {}
-
-
 def _ivfopq_maintained(spark: SparkSession, sf: str):
     """The session's maintained IVF-OPQ index over this sf's
     embeddings: bootstrapped once (one offline-job equivalent — model
@@ -310,70 +276,72 @@ def _ivfopq_maintained(spark: SparkSession, sf: str):
         IvfOpqIndexMaintainer,
     )
 
-    emb = table(spark, sf, "embeddings")
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            sf,
-            hash(tuple(sorted(emb.inputFiles()))),
+    def build():
+        mnt = IvfOpqIndexMaintainer(
+            spark,
+            tempfile.mkdtemp(prefix="ivfopq_index_"),
+            num_centroids=_IVFOPQ_CENTROIDS,
         )
-    except Exception:
-        key = None
-    if key is not None and key in _IVFOPQ_MAINT_MEMO:
-        return _IVFOPQ_MAINT_MEMO[key][0]
-    tmpdir = tempfile.mkdtemp(prefix="ivfopq_index_")
-    mnt = IvfOpqIndexMaintainer(
-        spark, os.path.join(tmpdir, "index"), num_centroids=_IVFOPQ_CENTROIDS
+        # the allocated model is shared with embedding_topk_opq's memo —
+        # pca_fit(gram) → opq_allocate is deterministic, so the bootstrap
+        # freezes the IDENTICAL rotation without paying a second
+        # covariance job in the same session. Model-only: the bootstrap
+        # projects the corpus itself inside save_opq_index, so pulling
+        # the ROTATED memo here would pay a corpus projection +
+        # checkpoint only to discard it (r12 review finding)
+        mnt.bootstrap(
+            table(spark, sf, "embeddings"),
+            dim=_OPQ_DIM, m=_OPQ_M, sub_dim=_OPQ_SD, ksub=_OPQ_K,
+            model=_opq_model(spark, sf),
+        )
+        return mnt
+
+    return memo.get(
+        spark,
+        _embeddings_key(spark, sf, "ivfopq_maintained"),
+        build,
+        lambda mnt: mnt.destroy(),
     )
-    # the allocated model is shared with embedding_topk_opq's memo —
-    # pca_fit(gram) → opq_allocate is deterministic, so the bootstrap
-    # freezes the IDENTICAL rotation without paying a second
-    # covariance job in the same session. Model-only: the bootstrap
-    # projects the corpus itself inside save_opq_index, so pulling the
-    # ROTATED memo here would pay a corpus projection + checkpoint
-    # only to discard it (r12 review finding)
-    model = _opq_model(spark, sf)
-    mnt.bootstrap(
-        emb, dim=_OPQ_DIM, m=_OPQ_M, sub_dim=_OPQ_SD, ksub=_OPQ_K,
-        model=model,
-    )
-    if key is not None:
-        _IVFOPQ_MAINT_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
+# the fitted model AND the pinned rotated corpus, per (session, sf,
+# files): bench loops and repeated serving calls must not re-run the
+# covariance job or re-project — the same train-once economics as the
+# PQ index memo (similarity.py). The pin also gives the two PQ passes
+# (codebook seed scan, encode scan) materialized rows instead of two
+# Python-worker projection runs, and keeps the PQ index memo hitting
+# across calls (its key is the corpus plan — the same frame object
+# yields the same plan).
 def _opq_rotated(spark: SparkSession, sf: str):
     """(model, pinned rotated corpus) for this sf — trained/projected
     once per session per input fileset."""
     from _data_engineering_pipeline_project_spark.functions.persist import (
         pinned_checkpoint,
     )
+    from _data_engineering_pipeline_project_spark.operators.dedup import (
+        _free_local_checkpoint,
+    )
     from _data_engineering_pipeline_project_spark.operators.pca import (
         pca_project_batch,
     )
 
-    emb = table(spark, sf, "embeddings")
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            sf,
-            hash(tuple(sorted(emb.inputFiles()))),
+    def build():
+        model = _opq_model(spark, sf)
+        # batch (Arrow) projection: at r·d = 2048 terms the unrolled
+        # expression form is past the measured Janino crossover
+        # (pca.py:pca_project_batch — 19.5 s of failed whole-stage
+        # compiles vs 0.3 s, bit-identical outputs)
+        emb = table(spark, sf, "embeddings")
+        return model, pinned_checkpoint(
+            pca_project_batch(emb, model, r=_OPQ_R, out_col="embedding")
         )
-    except Exception:
-        key = None
-    if key is not None and key in _OPQ_ROT_MEMO:
-        return _OPQ_ROT_MEMO[key]
-    model = _opq_model(spark, sf)
-    # batch (Arrow) projection: at r·d = 2048 terms the unrolled
-    # expression form is past the measured Janino crossover
-    # (pca.py:pca_project_batch — 19.5 s of failed whole-stage
-    # compiles vs 0.3 s, bit-identical outputs)
-    rot = pinned_checkpoint(
-        pca_project_batch(emb, model, r=_OPQ_R, out_col="embedding")
+
+    return memo.get(
+        spark,
+        _embeddings_key(spark, sf, "opq_rotated"),
+        build,
+        lambda v: _free_local_checkpoint(v[1]),
     )
-    if key is not None:
-        _OPQ_ROT_MEMO[key] = (model, rot)
-    return model, rot
 
 
 # the MODEL memo is split from the rotated-corpus memo (r12 review
@@ -381,9 +349,6 @@ def _opq_rotated(spark: SparkSession, sf: str):
 # model — its save_opq_index call projects the corpus itself — and
 # extracting the model through _opq_rotated paid a full corpus
 # projection + eager checkpoint that was immediately discarded
-_OPQ_MODEL_MEMO: dict = {}
-
-
 def _opq_model(spark: SparkSession, sf: str) -> dict:
     """The session's allocated OPQ model for this sf (covariance fit +
     eigh + balanced allocation; NO corpus projection)."""
@@ -392,23 +357,13 @@ def _opq_model(spark: SparkSession, sf: str) -> dict:
         pca_fit,
     )
 
-    emb = table(spark, sf, "embeddings")
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            sf,
-            hash(tuple(sorted(emb.inputFiles()))),
+    def build() -> dict:
+        emb = table(spark, sf, "embeddings")
+        return opq_allocate(
+            pca_fit(emb, dim=_OPQ_DIM, method="gram"), _OPQ_M, _OPQ_SD
         )
-    except Exception:
-        key = None
-    if key is not None and key in _OPQ_MODEL_MEMO:
-        return _OPQ_MODEL_MEMO[key]
-    model = opq_allocate(
-        pca_fit(emb, dim=_OPQ_DIM, method="gram"), _OPQ_M, _OPQ_SD
-    )
-    if key is not None:
-        _OPQ_MODEL_MEMO[key] = model
-    return model
+
+    return memo.get(spark, _embeddings_key(spark, sf, "opq_model"), build)
 
 
 # --------------------------------------------------------------------------

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _data_engineering_pipeline_project_spark import memo
 from _data_engineering_pipeline_project_spark.catalog import table
 from _data_engineering_pipeline_project_spark.queries import query
 
@@ -173,23 +174,9 @@ def ivfopq_recall_audit_embeddings(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Maintained dedup clusters (r12 wave 3): ClusterMaintainer, served
 # --------------------------------------------------------------------------
-# session memo: ONE maintained cluster state per (app, sf, fileset) —
+# session memo: ONE maintained cluster state per (session, sf) —
 # the registered query serves the maintainer's relations instead of a
-# per-call batch recompute (the _IVFOPQ_MAINT_MEMO economics)
-_CC_MAINT_MEMO: dict = {}
-
-
-def clear_cluster_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``):
-    drop memoized maintained-cluster states and their on-disk temp
-    dirs."""
-    import shutil
-
-    for _mnt, tmpdir in _CC_MAINT_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _CC_MAINT_MEMO.clear()
-
-
+# per-call batch recompute (the maintained IVF-OPQ economics)
 def _cc_maintained(spark: SparkSession, sf: str):
     """The session's maintained cluster state over this sf's MinHash
     pair graph: the shared pair stage is split into three deterministic
@@ -199,30 +186,29 @@ def _cc_maintained(spark: SparkSession, sf: str):
     maintainer's contract (N ticks == one-shot, bit-for-bit, pinned by
     test), which is exactly why the one-shot recursive-CTE oracle
     checks it."""
-    import os
     import tempfile
 
     from _data_engineering_pipeline_project_spark.queries_ext import (
         _minhash_pairs_shared,
-        _session_key,
     )
     from _data_engineering_pipeline_project_spark.streaming.clustermaint import (
         ClusterMaintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _CC_MAINT_MEMO:
-        return _CC_MAINT_MEMO[key][0]
-    pairs = _minhash_pairs_shared(spark, sf)  # pinned: one execution/session
-    tmpdir = tempfile.mkdtemp(prefix="cc_maint_")
-    mnt = ClusterMaintainer(spark, os.path.join(tmpdir, "clusters"))
-    bucket = F.pmod(
-        F.crc32(F.col("doc_a").cast("string").cast("binary")), F.lit(3)
+    def build():
+        # pinned: one execution per session
+        pairs = _minhash_pairs_shared(spark, sf)
+        mnt = ClusterMaintainer(spark, tempfile.mkdtemp(prefix="cc_maint_"))
+        bucket = F.pmod(
+            F.crc32(F.col("doc_a").cast("string").cast("binary")), F.lit(3)
+        )
+        for i in range(3):
+            mnt.merge_batch(pairs.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("cc_maint", sf), build, lambda mnt: mnt.destroy()
     )
-    for i in range(3):
-        mnt.merge_batch(pairs.filter(bucket == i), batch_id=i)
-    _CC_MAINT_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 def _cc_maintained_sql() -> str:
@@ -264,18 +250,6 @@ def dedup_clusters_maintained(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Maintained near-dup index (r12 wave 3): NearDupIndexMaintainer, served
 # --------------------------------------------------------------------------
-_NDM_MEMO: dict = {}
-
-
-def clear_neardup_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``)."""
-    import shutil
-
-    for _mnt, tmpdir in _NDM_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _NDM_MEMO.clear()
-
-
 def _ndm_maintained(spark: SparkSession, sf: str):
     """The session's maintained near-dup index over this sf's documents:
     two deterministic ingest slices (crc32(doc_id) mod 2 — corpus
@@ -283,35 +257,33 @@ def _ndm_maintained(spark: SparkSession, sf: str):
     Served pairs are split-independent by the maintainer's contract
     (pairs() == one-shot minhash_near_dup_pairs over the union,
     bit-for-bit, pinned by test), so the one-shot oracle checks them."""
-    import os
     import tempfile
 
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.streaming.neardupmaint import (
         NearDupIndexMaintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _NDM_MEMO:
-        return _NDM_MEMO[key][0]
-    docs = table(spark, sf, "documents").select("doc_id", "text")
-    tmpdir = tempfile.mkdtemp(prefix="ndm_index_")
-    mnt = NearDupIndexMaintainer(spark, os.path.join(tmpdir, "index"))
-    # two ingest slices: a tick has a FIXED scheduling overhead (~5 s
-    # after the r13 lineage discipline — was ~18 s; tools/
-    # measure_neardup_maint.py) that dwarfs its O(batch) work at
-    # registry scale, so the bootstrap uses the fewest ticks that
-    # still exercise the cross-batch (batch-bands x stored-bands)
-    # path; the unit tests pin the 3-4-batch contract
-    bucket = F.pmod(
-        F.crc32(F.col("doc_id").cast("string").cast("binary")), F.lit(2)
+    def build():
+        docs = table(spark, sf, "documents").select("doc_id", "text")
+        mnt = NearDupIndexMaintainer(
+            spark, tempfile.mkdtemp(prefix="ndm_index_")
+        )
+        # two ingest slices: a tick has a FIXED scheduling overhead (~5 s
+        # after the r13 lineage discipline — was ~18 s; tools/
+        # measure_neardup_maint.py) that dwarfs its O(batch) work at
+        # registry scale, so the bootstrap uses the fewest ticks that
+        # still exercise the cross-batch (batch-bands x stored-bands)
+        # path; the unit tests pin the 3-4-batch contract
+        bucket = F.pmod(
+            F.crc32(F.col("doc_id").cast("string").cast("binary")), F.lit(2)
+        )
+        for i in range(2):
+            mnt.merge_batch(docs.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("ndm_index", sf), build, lambda mnt: mnt.destroy()
     )
-    for i in range(2):
-        mnt.merge_batch(docs.filter(bucket == i), batch_id=i)
-    _NDM_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 def _ndm_pairs_sql() -> str:
@@ -344,18 +316,6 @@ def near_dup_pairs_maintained(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Maintained stratified eval panel (r12 wave 3): SampleMaintainer, served
 # --------------------------------------------------------------------------
-_PANEL_MEMO: dict = {}
-
-
-def clear_panel_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``)."""
-    import shutil
-
-    for _mnt, tmpdir in _PANEL_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _PANEL_MEMO.clear()
-
-
 def _panel_maintained(spark: SparkSession, sf: str):
     """The session's maintained balanced panel: documents arrive in
     three deterministic ingest slices and tick a stratified
@@ -363,12 +323,8 @@ def _panel_maintained(spark: SparkSession, sf: str):
     bottom-k is a monoid per stratum, so the served panel is
     split-independent (N ticks == one-shot, pinned by test) — the
     one-shot oracle checks it."""
-    import os
     import tempfile
 
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.queries_ext11 import (
         _BK_LANG_K,
     )
@@ -376,27 +332,27 @@ def _panel_maintained(spark: SparkSession, sf: str):
         SampleMaintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _PANEL_MEMO:
-        return _PANEL_MEMO[key][0]
-    docs = table(spark, sf, "documents").select(
-        "lang", "doc_id", "source", "n_chars"
+    def build():
+        docs = table(spark, sf, "documents").select(
+            "lang", "doc_id", "source", "n_chars"
+        )
+        mnt = SampleMaintainer(
+            spark,
+            tempfile.mkdtemp(prefix="panel_maint_"),
+            key_col="doc_id",
+            k=_BK_LANG_K,
+            group_col="lang",
+        )
+        bucket = F.pmod(
+            F.crc32(F.col("doc_id").cast("string").cast("binary")), F.lit(3)
+        )
+        for i in range(3):
+            mnt.merge_batch(docs.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("panel_maint", sf), build, lambda mnt: mnt.destroy()
     )
-    tmpdir = tempfile.mkdtemp(prefix="panel_maint_")
-    mnt = SampleMaintainer(
-        spark,
-        os.path.join(tmpdir, "panel"),
-        key_col="doc_id",
-        k=_BK_LANG_K,
-        group_col="lang",
-    )
-    bucket = F.pmod(
-        F.crc32(F.col("doc_id").cast("string").cast("binary")), F.lit(3)
-    )
-    for i in range(3):
-        mnt.merge_batch(docs.filter(bucket == i), batch_id=i)
-    _PANEL_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 def _panel_sql() -> str:
@@ -491,18 +447,6 @@ def corpus_keep_list_maintained(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Maintained SemDeDup (r12 wave 3): SemDeDupMaintainer, served
 # --------------------------------------------------------------------------
-_SDD_MEMO: dict = {}
-
-
-def clear_semdedup_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``)."""
-    import shutil
-
-    for _mnt, tmpdir in _SDD_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _SDD_MEMO.clear()
-
-
 def _sdd_maintained(spark: SparkSession, sf: str):
     """The session's maintained SemDeDup index over this sf's
     embeddings: centroids frozen at bootstrap with the one-shot's own
@@ -510,36 +454,32 @@ def _sdd_maintained(spark: SparkSession, sf: str):
     oracle's seed CTE derives the identical centroid set), then two
     ingest slices ticked against them. Served pairs equal the one-shot
     under frozen centroids (pinned by test)."""
-    import os
     import tempfile
 
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.streaming.semdedupmaint import (
         SemDeDupMaintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _SDD_MEMO:
-        return _SDD_MEMO[key][0]
-    emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
-    tmpdir = tempfile.mkdtemp(prefix="sdd_index_")
-    mnt = SemDeDupMaintainer(
-        spark,
-        os.path.join(tmpdir, "index"),
-        num_centroids=16,
-        threshold=0.4,
-        dim=64,
+    def build():
+        emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
+        mnt = SemDeDupMaintainer(
+            spark,
+            tempfile.mkdtemp(prefix="sdd_index_"),
+            num_centroids=16,
+            threshold=0.4,
+            dim=64,
+        )
+        mnt.bootstrap(emb)
+        bucket = F.pmod(
+            F.crc32(F.col("vec_id").cast("string").cast("binary")), F.lit(2)
+        )
+        for i in range(2):
+            mnt.merge_batch(emb.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("sdd_index", sf), build, lambda mnt: mnt.destroy()
     )
-    mnt.bootstrap(emb)
-    bucket = F.pmod(
-        F.crc32(F.col("vec_id").cast("string").cast("binary")), F.lit(2)
-    )
-    for i in range(2):
-        mnt.merge_batch(emb.filter(bucket == i), batch_id=i)
-    _SDD_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 def _sdd_pairs_sql() -> str:

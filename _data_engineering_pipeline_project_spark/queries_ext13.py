@@ -30,26 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _data_engineering_pipeline_project_spark import memo
 from _data_engineering_pipeline_project_spark.catalog import table
 from _data_engineering_pipeline_project_spark.queries import query
 
 # --------------------------------------------------------------------------
-# Maintained BM25 index (session memo — the _IVFOPQ_MAINT_MEMO economics)
+# Maintained BM25 index (session memo — the maintained IVF-OPQ economics)
 # --------------------------------------------------------------------------
-_BM25_MAINT_MEMO: dict = {}
-
-
-def clear_bm25_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``):
-    drop memoized maintained BM25 indexes and their on-disk temp
-    dirs."""
-    import shutil
-
-    for _mnt, tmpdir in _BM25_MAINT_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _BM25_MAINT_MEMO.clear()
-
-
 def _bm25_maintained(spark: SparkSession, sf: str):
     """The session's maintained BM25 inverted index over this sf's
     documents: two deterministic ingest slices (crc32(doc_id) mod 2 —
@@ -58,34 +45,30 @@ def _bm25_maintained(spark: SparkSession, sf: str):
     (postings append disjointly; df/stats are commutative monoids;
     N ticks == one-shot bit-for-bit, pinned by test), which is why the
     one-shot lexical oracle checks them."""
-    import os
     import tempfile
 
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.streaming.bm25maint import (
         Bm25Maintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _BM25_MAINT_MEMO:
-        return _BM25_MAINT_MEMO[key][0]
-    docs = table(spark, sf, "documents").select("doc_id", "text")
-    tmpdir = tempfile.mkdtemp(prefix="bm25_maint_")
-    mnt = Bm25Maintainer(spark, os.path.join(tmpdir, "index"))
-    # coalesce(bucket, 0): a null doc_id must land in exactly one slice
-    # (the one-shot oracle's corpus scalars count every row)
-    bucket = F.coalesce(
-        F.pmod(
-            F.crc32(F.col("doc_id").cast("string").cast("binary")), F.lit(2)
-        ),
-        F.lit(0),
+    def build():
+        docs = table(spark, sf, "documents").select("doc_id", "text")
+        mnt = Bm25Maintainer(spark, tempfile.mkdtemp(prefix="bm25_maint_"))
+        # coalesce(bucket, 0): a null doc_id must land in exactly one slice
+        # (the one-shot oracle's corpus scalars count every row)
+        bucket = F.coalesce(
+            F.pmod(
+                F.crc32(F.col("doc_id").cast("string").cast("binary")), F.lit(2)
+            ),
+            F.lit(0),
+        )
+        for i in range(2):
+            mnt.merge_batch(docs.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("bm25_maint", sf), build, lambda mnt: mnt.destroy()
     )
-    for i in range(2):
-        mnt.merge_batch(docs.filter(bucket == i), batch_id=i)
-    _BM25_MAINT_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 # --------------------------------------------------------------------------
@@ -240,61 +223,45 @@ def hybrid_search_rrf_maintained(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # RAG retrieval served from a maintained chunk-level BM25 index
 # --------------------------------------------------------------------------
-_RAG_BM25_MAINT_MEMO: dict = {}
-
-
-def clear_rag_bm25_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``)."""
-    import shutil
-
-    for _mnt, tmpdir in _RAG_BM25_MAINT_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _RAG_BM25_MAINT_MEMO.clear()
-
-
 def _rag_bm25_maintained(spark: SparkSession, sf: str):
     """The session's maintained CHUNK-level BM25 inverted index:
     context-window chunks (pure per-doc function — chunking commutes
     with ingest slicing) ticked into a ``Bm25Maintainer`` keyed by
     cid. Same split-independence contract as the document index."""
-    import os
     import tempfile
 
     from _data_engineering_pipeline_project_spark.operators import (
         curation as C,
     )
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.streaming.bm25maint import (
         Bm25Maintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _RAG_BM25_MAINT_MEMO:
-        return _RAG_BM25_MAINT_MEMO[key][0]
-    docs = table(spark, sf, "documents")
-    chunks = C.chunk_documents(docs, chunk_chars=120, overlap=0).select(
-        (F.col("doc_id") * 1000 + F.col("chunk_idx")).alias("cid"),
-        "chunk",
+    def build():
+        docs = table(spark, sf, "documents")
+        chunks = C.chunk_documents(docs, chunk_chars=120, overlap=0).select(
+            (F.col("doc_id") * 1000 + F.col("chunk_idx")).alias("cid"),
+            "chunk",
+        )
+        mnt = Bm25Maintainer(
+            spark,
+            tempfile.mkdtemp(prefix="rag_bm25_maint_"),
+            id_col="cid",
+            text_col="chunk",
+        )
+        bucket = F.coalesce(
+            F.pmod(
+                F.crc32(F.col("cid").cast("string").cast("binary")), F.lit(2)
+            ),
+            F.lit(0),
+        )
+        for i in range(2):
+            mnt.merge_batch(chunks.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("rag_bm25_maint", sf), build, lambda mnt: mnt.destroy()
     )
-    tmpdir = tempfile.mkdtemp(prefix="rag_bm25_maint_")
-    mnt = Bm25Maintainer(
-        spark,
-        os.path.join(tmpdir, "index"),
-        id_col="cid",
-        text_col="chunk",
-    )
-    bucket = F.coalesce(
-        F.pmod(
-            F.crc32(F.col("cid").cast("string").cast("binary")), F.lit(2)
-        ),
-        F.lit(0),
-    )
-    for i in range(2):
-        mnt.merge_batch(chunks.filter(bucket == i), batch_id=i)
-    _RAG_BM25_MAINT_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 def _rag_maint_sql() -> str:
@@ -396,18 +363,6 @@ def rag_retrieval_maintained(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Maintained covariance / PCA sufficient statistics (r13 wave 2)
 # --------------------------------------------------------------------------
-_COV_MAINT_MEMO: dict = {}
-
-
-def clear_cov_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``)."""
-    import shutil
-
-    for _mnt, tmpdir in _COV_MAINT_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _COV_MAINT_MEMO.clear()
-
-
 def _cov_maintained(spark: SparkSession, sf: str):
     """The session's maintained covariance statistics over this sf's
     embeddings: three deterministic ingest slices ticked into a
@@ -415,34 +370,30 @@ def _cov_maintained(spark: SparkSession, sf: str):
     the served relations are split-independent (N ticks == one-shot
     ``pca_fit(method='gram')``, bit-for-bit, pinned by test) — which
     is why the one-shot oracles check them verbatim."""
-    import os
     import tempfile
 
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.streaming.covmaint import (
         CovarianceMaintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _COV_MAINT_MEMO:
-        return _COV_MAINT_MEMO[key][0]
-    emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
-    tmpdir = tempfile.mkdtemp(prefix="cov_maint_")
-    mnt = CovarianceMaintainer(
-        spark, os.path.join(tmpdir, "sums"), dim=64
+    def build():
+        emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
+        mnt = CovarianceMaintainer(
+            spark, tempfile.mkdtemp(prefix="cov_maint_"), dim=64
+        )
+        bucket = F.coalesce(
+            F.pmod(
+                F.crc32(F.col("vec_id").cast("string").cast("binary")), F.lit(3)
+            ),
+            F.lit(0),
+        )
+        for i in range(3):
+            mnt.merge_batch(emb.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("cov_maint", sf), build, lambda mnt: mnt.destroy()
     )
-    bucket = F.coalesce(
-        F.pmod(
-            F.crc32(F.col("vec_id").cast("string").cast("binary")), F.lit(3)
-        ),
-        F.lit(0),
-    )
-    for i in range(3):
-        mnt.merge_batch(emb.filter(bucket == i), batch_id=i)
-    _COV_MAINT_MEMO[key] = (mnt, tmpdir)
-    return mnt
 
 
 def _cov_audit_sql() -> str:
@@ -514,18 +465,6 @@ def pca_scree_maintained(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Maintained drift report, oracled (r13 wave 3)
 # --------------------------------------------------------------------------
-_DRIFT_MAINT_MEMO: dict = {}
-
-
-def clear_drift_maint_memo() -> None:
-    """Eviction hook (wired into ``queries_ext.clear_query_caches``)."""
-    import shutil
-
-    for _mnt, tmpdir in _DRIFT_MAINT_MEMO.values():
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    _DRIFT_MAINT_MEMO.clear()
-
-
 def _drift_maintained(spark: SparkSession, sf: str):
     """The session's maintained drift monitor over this sf's
     embeddings: md5-bucket slice 0 establishes the pinned baseline
@@ -533,32 +472,28 @@ def _drift_maintained(spark: SparkSession, sf: str):
     twin), slices 1-2 are the post-baseline ingest. Every quantity is
     an exact integer sum, so the served report is split-independent
     AND statically SQL-expressible."""
-    import os
     import tempfile
 
     from _data_engineering_pipeline_project_spark.operators import (
         sampling as S,
     )
-    from _data_engineering_pipeline_project_spark.queries_ext import (
-        _session_key,
-    )
     from _data_engineering_pipeline_project_spark.streaming.driftmaint import (
         DriftMaintainer,
     )
 
-    key = _session_key(spark, sf)
-    if key in _DRIFT_MAINT_MEMO:
-        return _DRIFT_MAINT_MEMO[key][0]
-    emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
-    tmpdir = tempfile.mkdtemp(prefix="drift_maint_")
-    mnt = DriftMaintainer(spark, os.path.join(tmpdir, "drift"))
-    bucket = S.hash_bucket("vec_id", 3)
-    mnt.merge_batch(emb.filter(bucket == 0), batch_id=0)
-    mnt.mark_baseline()
-    for i in (1, 2):
-        mnt.merge_batch(emb.filter(bucket == i), batch_id=i)
-    _DRIFT_MAINT_MEMO[key] = (mnt, tmpdir)
-    return mnt
+    def build():
+        emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
+        mnt = DriftMaintainer(spark, tempfile.mkdtemp(prefix="drift_maint_"))
+        bucket = S.hash_bucket("vec_id", 3)
+        mnt.merge_batch(emb.filter(bucket == 0), batch_id=0)
+        mnt.mark_baseline()
+        for i in (1, 2):
+            mnt.merge_batch(emb.filter(bucket == i), batch_id=i)
+        return mnt
+
+    return memo.get(
+        spark, ("drift_maint", sf), build, lambda mnt: mnt.destroy()
+    )
 
 
 _DRIFT_MAINT_SQL = """

@@ -50,11 +50,16 @@ def _part_batches(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     f"""
     WITH {_BATCHES_SQL}
     SELECT coalesce(b2.p_partkey, b1.p_partkey) AS p_partkey,
-           coalesce(b2.p_name, b1.p_name) AS p_name,
-           coalesce(b2.p_brand, b1.p_brand) AS p_brand,
-           coalesce(b2.p_type, b1.p_type) AS p_type,
-           coalesce(b2.p_size, b1.p_size) AS p_size,
-           coalesce(b2.p_retailprice, b1.p_retailprice) AS p_retailprice,
+           CASE WHEN b2.p_partkey IS NOT NULL THEN b2.p_name
+                ELSE b1.p_name END AS p_name,
+           CASE WHEN b2.p_partkey IS NOT NULL THEN b2.p_brand
+                ELSE b1.p_brand END AS p_brand,
+           CASE WHEN b2.p_partkey IS NOT NULL THEN b2.p_type
+                ELSE b1.p_type END AS p_type,
+           CASE WHEN b2.p_partkey IS NOT NULL THEN b2.p_size
+                ELSE b1.p_size END AS p_size,
+           CASE WHEN b2.p_partkey IS NOT NULL THEN b2.p_retailprice
+                ELSE b1.p_retailprice END AS p_retailprice,
            CASE WHEN b1.p_partkey IS NULL THEN TIMESTAMP '2024-02-01'         -- insert
                 WHEN b2.p_partkey IS NULL THEN TIMESTAMP '2024-02-01'         -- delete
                 WHEN b2.p_brand IS DISTINCT FROM b1.p_brand
@@ -1115,7 +1120,8 @@ def frequent_event_types(spark: SparkSession, sf: str) -> DataFrame:
     UNION ALL
     SELECT 'at_batch2' AS probe,
            coalesce(b2.p_partkey, b1.p_partkey) AS p_partkey,
-           coalesce(b2.p_brand, b1.p_brand) AS p_brand,
+           CASE WHEN b2.p_partkey IS NOT NULL THEN b2.p_brand
+                ELSE b1.p_brand END AS p_brand,
            (b2.p_partkey IS NOT NULL) AS alive
     FROM b1 FULL OUTER JOIN b2 ON b1.p_partkey = b2.p_partkey
     WHERE coalesce(b2.p_partkey, b1.p_partkey) % 10 = 1

@@ -23,7 +23,9 @@ This module is that loop composed from Spark primitives:
   resolve the pointer and never see a half-written generation; a
   crashed compaction leaves an orphan directory, not a broken table.
   Files that arrive DURING a compaction are not lost: they stay in the
-  landing directory and ride the next generation.
+  landing directory and ride the next generation. The pointer is
+  written at construction (generation 0: none yet), so a missing
+  pointer beside a committed generation raises instead of hiding it.
 - **Consumed-file manifest** (VERDICT r6 #3): each generation carries a
   ``_CONSUMED`` file naming every landing file folded into it (written
   BEFORE the pointer swap — the underscore prefix makes Spark's parquet
@@ -46,12 +48,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from _data_engineering_pipeline_project_spark.streaming.versioned import (
+    committed_dirs,
+    lost_pointer,
     read_pointer,
     write_pointer,
 )
 
 _POINTER = "_CURRENT"
 _MANIFEST = "_CONSUMED"
+_NO_GENERATION = 0  # the pointer before the first compaction
+_GENERATIONS = ("gen_v*/_SUCCESS",)  # committed generation dirs
 
 
 def _landing_files(landing_dir: str) -> list[str]:
@@ -133,6 +139,13 @@ class CompactionMaintainer:
         self.quantize = quantize
         self.quantize_bits = quantize_bits
         os.makedirs(table_dir, exist_ok=True)
+        # the pointer is committed before the first compaction, so a
+        # missing one beside a committed generation is a lost pointer,
+        # and a crash inside the first compaction is a plain replay
+        if not os.path.exists(self._pointer_path()):
+            if committed_dirs(table_dir, _GENERATIONS):
+                raise self._lost_pointer()
+            self._commit(_NO_GENERATION)
 
     # -- pointer protocol (``streaming/versioned.py`` I/O) ---------------
     def _pointer_path(self) -> str:
@@ -140,15 +153,21 @@ class CompactionMaintainer:
 
     def current_version(self) -> int | None:
         """The committed generation (None before the first compaction).
-        A pointer that is not an integer raises: serving landing files
-        alone would silently drop every compacted row."""
+        A pointer that is missing or not an integer raises: serving
+        landing files alone would silently drop every compacted row."""
         v = read_pointer(self._pointer_path(), required=())
-        if v is not None and not isinstance(v, int):
+        if v is None:
+            raise self._lost_pointer()
+        if not isinstance(v, int):
             raise ValueError(
                 f"corrupt {_POINTER} pointer at {self.table_dir} "
                 f"(expected a generation number, got {v!r})"
             )
-        return v
+        return v or None
+
+    def _lost_pointer(self) -> ValueError:
+        gens = committed_dirs(self.table_dir, _GENERATIONS)
+        return lost_pointer("compaction", self.table_dir, _POINTER, gens)
 
     def _gen_dir(self, version: int) -> str:
         return os.path.join(self.table_dir, f"gen_v{version}")

@@ -91,6 +91,31 @@ def read_pointer(path: str, required: tuple = ("version",)) -> dict | None:
     return meta
 
 
+def committed_dirs(base_dir: str, globs) -> list[str]:
+    """The top-level dirs under ``base_dir`` that hold committed state:
+    those with a path matching one of ``globs`` (relative to
+    ``base_dir``)."""
+    return sorted(
+        {
+            os.path.relpath(p, base_dir).split(os.sep)[0]
+            for g in globs
+            for p in glob.glob(os.path.join(glob.escape(base_dir), g))
+        }
+    )
+
+
+def lost_pointer(kind: str, base_dir: str, pointer: str, dirs) -> ValueError:
+    """The error for committed ``dirs`` under ``base_dir`` without their
+    ``pointer``: what is committed lives only in the pointer."""
+    return ValueError(
+        f"{kind} state at {base_dir} has committed dirs ({dirs}) but no "
+        f"{pointer} pointer; what is committed (version, watermark, "
+        "geometry, live dirs) lives only in the pointer, so this state "
+        "cannot be safely adopted. Restore the pointer from backup or "
+        "rebuild in a fresh base_dir."
+    )
+
+
 def checkpoint_identity(checkpoint_dir: str) -> str:
     """The streaming query id recorded in ``<checkpoint>/metadata`` — a
     fresh uuid every time the directory is (re)created, so ``rm -rf``
@@ -173,13 +198,7 @@ class VersionedState:
                 )
             self._meta = meta
             return
-        orphans = sorted(
-            {
-                os.path.relpath(p, base_dir).split(os.sep)[0]
-                for g in self._ORPHANS
-                for p in glob.glob(os.path.join(glob.escape(base_dir), g))
-            }
-        )
+        orphans = committed_dirs(base_dir, self._ORPHANS)
         self._meta = self._adopt_orphans(fresh, orphans) if orphans else fresh
         self._commit()
 
@@ -192,16 +211,15 @@ class VersionedState:
         """The pointer to rebuild from committed dirs when ``_CURRENT``
         is lost. Fails by default; see the module docstring for when a
         class may override it."""
-        raise ValueError(
-            f"{self._KIND} state at {self.base_dir} has committed dirs "
-            f"({orphans}) but no {self._POINTER} pointer; the watermark, "
-            "geometry and live-dir manifest live only in the pointer, so "
-            "this state cannot be safely adopted. Restore the pointer from "
-            "backup or rebuild in a fresh base_dir."
-        )
+        raise lost_pointer(self._KIND, self.base_dir, self._POINTER, orphans)
 
     def _pointer_path(self) -> str:
         return os.path.join(self.base_dir, self._POINTER)
+
+    def destroy(self) -> None:
+        """Delete the whole state (``base_dir``) — the release step of a
+        session-scoped index (``memo.py``)."""
+        shutil.rmtree(self.base_dir, ignore_errors=True)
 
     def _commit(self, **changes) -> None:
         """Swap the pointer to the current meta updated by ``changes``."""

@@ -261,6 +261,7 @@ def main() -> None:
     # were missing from the extensions timings until r10 wave 2)
     import __spark_entry__  # noqa: F401
 
+    from _data_engineering_pipeline_project_spark import memo
     from _data_engineering_pipeline_project_spark import queries as q
     from _data_engineering_pipeline_project_spark.session import get_spark
 
@@ -327,7 +328,8 @@ def main() -> None:
     # but drops the 130-entry extensions/tpch detail, so it stays an
     # order of magnitude shorter than the detail line. "load" stamps the
     # 1-min loadavg (before warm-up / after the headline block / at
-    # exit): a contaminated measurement labels itself.
+    # exit): a contaminated measurement labels itself. "memo" is the
+    # session memo's hit/miss/key-error/eviction counts for the run.
     loads = [load_before, load_after_headline, round(os.getloadavg()[0], 2)]
     print(
         json.dumps(
@@ -345,6 +347,7 @@ def main() -> None:
                     "tpch": round(tpch_total, 3),
                 },
                 "load": loads,
+                "memo": memo.stats(),
                 "sf": sf,
             }
         )

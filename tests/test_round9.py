@@ -206,10 +206,12 @@ def test_load_pq_index_fresh_session_serves_identical(spark, tmp_path):
     cleared and a NEW SparkSession loads the artifact — the served
     top-k must equal the training session's memoized result."""
     from _data_engineering_pipeline_project_spark.operators.similarity import (
-        clear_pq_index_memo,
         load_pq_index,
         pq_adc_topk,
         save_pq_index,
+    )
+    from _data_engineering_pipeline_project_spark.queries_ext import (
+        clear_query_caches,
     )
     from _data_engineering_pipeline_project_spark.queries_ext4 import (
         _PQ_K,
@@ -227,7 +229,7 @@ def test_load_pq_index_fresh_session_serves_identical(spark, tmp_path):
             emb, qs, k=5, m=_PQ_M, sub_dim=_PQ_SD, ksub=_PQ_K
         ).collect()
     )
-    clear_pq_index_memo()  # drop the training session's pinned frames
+    clear_query_caches()  # drop the training session's memoized index
     fresh = spark.newSession()
     cb, codes, params = load_pq_index(fresh, path)
     emb2 = fresh.read.parquet(f"{SF}/embeddings.parquet")

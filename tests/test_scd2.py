@@ -49,6 +49,26 @@ def test_update_creates_history(spark):
     assert hist == [(1, "a", 1.0, False, T1, T2)]
 
 
+def test_update_to_null_takes_the_null(spark):
+    """An update that sets an attribute to NULL must serve the NULL, not
+    keep the old value; the old version goes to history. snapshot_diff
+    projects the incoming side the same way."""
+    from _data_engineering_pipeline_project_spark.operators.joins import (
+        snapshot_diff,
+    )
+
+    b1 = spark.createDataFrame([(1, "a", 1.0)], SCHEMA)
+    r1 = scd2_merge(b1, None, ["id"], T1)
+    b2 = spark.createDataFrame([(1, None, 1.0)], SCHEMA)
+    r2 = scd2_merge(b2, r1.snapshot, ["id"], T2)
+    assert snap(r2.snapshot) == {1: (None, 1.0, False, T2)}
+    assert [tuple(r) for r in r2.history.collect()] == [
+        (1, "a", 1.0, False, T1, T2)
+    ]
+    diff = snapshot_diff(b2, b1, ["id"]).collect()
+    assert [tuple(r) for r in diff] == [(1, None, 1.0, "update")]
+
+
 def test_delete_soft_deletes_and_archives(spark):
     b1 = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA)
     r1 = scd2_merge(b1, None, ["id"], T1)

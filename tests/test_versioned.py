@@ -198,6 +198,49 @@ def test_other_pointers_fail_loudly_on_corruption(spark, tmp_path):
         cm.current_version()
 
 
+def _compaction(tmp_path, keys):
+    """A CompactionMaintainer whose landing dir holds one file per key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    for k in keys:
+        pq.write_table(pa.table({"k": [k]}), os.path.join(landing, f"{k}.parquet"))
+    table = str(tmp_path / "table")
+    return landing, table, CompactionMaintainer(landing, table, ["k"], min_files=2)
+
+
+def test_compaction_lost_pointer_fails_loudly(spark, tmp_path):
+    """A lost _CURRENT beside a committed generation must not hide it:
+    serving the landing files alone would drop every compacted row, and
+    the next compaction would overwrite the generation."""
+    landing, table, cm = _compaction(tmp_path, [1, 2, 3])
+    assert cm.run_once(spark)["version"] == 1
+    os.remove(os.path.join(table, "_CURRENT"))
+    with pytest.raises(ValueError, match="no _CURRENT pointer"):
+        cm.read_current(spark)
+    with pytest.raises(ValueError, match="cannot be safely adopted"):
+        CompactionMaintainer(landing, table, ["k"], min_files=2)
+
+
+def test_compaction_crash_in_first_compaction_replays(spark, tmp_path):
+    """A crash after the first generation's write but before its pointer
+    swap: the eager pointer still says "no generation", so reopening
+    serves the landing files and the replayed compaction overwrites the
+    orphan gen_v1."""
+    landing, table, cm = _compaction(tmp_path, [1, 2])
+    assert cm.current_version() is None
+    spark.createDataFrame([(9,)], "k long").write.parquet(
+        os.path.join(table, "gen_v1")
+    )
+    cm = CompactionMaintainer(landing, table, ["k"], min_files=2)
+    assert cm.current_version() is None
+    assert sorted(r.k for r in cm.read_current(spark).collect()) == [1, 2]
+    assert cm.run_once(spark)["version"] == 1
+    assert sorted(r.k for r in cm.read_current(spark).collect()) == [1, 2]
+
+
 def test_lost_ring_pointer_fails_once_the_ring_has_rotated(spark, tmp_path):
     """Restarting the ring at slot 0 after a lost ``_RING`` made the next
     rotate() reset a slot still inside the retention window (its keys
