@@ -18,6 +18,11 @@ memoized here, under one policy:
   every memoized DataFrame holds its session strongly, so a weak key
   would never drop. Instead each miss sweeps the entries whose session's
   ``sparkContext._jsc`` is None.
+- **Storage**: an entry that owns files makes its dir with
+  :func:`scratch_dir`, under one per-process root in the system temp
+  dir. Release still removes the entry's own dir; an ``atexit`` hook
+  removes the root, so a process that exits without :func:`clear` (a
+  sweep, ``bench.py``, a test run) leaves nothing behind.
 - **Concurrency**: builds run outside the lock, because memos nest (the
   cluster memo builds the pair memo, which builds the shingle memo, which
   reads ``catalog.table``) and callers build from several threads. When
@@ -34,7 +39,11 @@ eviction releases that storage.
 
 from __future__ import annotations
 
+import atexit
 import logging
+import os
+import shutil
+import tempfile
 import threading
 from collections import Counter, OrderedDict
 from typing import Any, Callable, Hashable
@@ -45,6 +54,7 @@ _log = logging.getLogger(__name__)
 _lock = threading.Lock()
 _entries: OrderedDict = OrderedDict()  # (session, key) -> (value, release)
 _counts: Counter = Counter()
+_root: str | None = None  # the per-process scratch root, made on first use
 
 
 def get(
@@ -96,6 +106,24 @@ def clear() -> None:
         freed = list(_entries.values())
         _entries.clear()
     _run(freed)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh dir for a memo-owned artifact (``prefix`` names its kind),
+    inside the per-process scratch root. The entry's release removes it;
+    whatever is left goes with the root at interpreter exit."""
+    global _root
+    with _lock:
+        if _root is None:
+            _root = tempfile.mkdtemp(prefix="spark_graft_memo_")
+            atexit.register(_remove_root, _root, os.getpid())
+        root = _root
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _remove_root(root: str, pid: int) -> None:
+    if os.getpid() == pid:  # not in a forked child that inherited the hook
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def stats() -> dict:

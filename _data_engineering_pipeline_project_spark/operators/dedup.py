@@ -34,6 +34,7 @@ from _data_engineering_pipeline_project_spark.functions.cachetrack import (
 from _data_engineering_pipeline_project_spark.functions.persist import (
     pinned_checkpoint,
 )
+from _data_engineering_pipeline_project_spark.operators.skew import cap_group_width
 from _data_engineering_pipeline_project_spark.operators.textstats import (
     fingerprint,
     tokens,
@@ -271,15 +272,8 @@ def drop_hot_shingles(
     carry no dedup signal (they don't discriminate), so removing them
     from the shingle universe bounds every bucket's width at ``max_df``
     while leaving true near-dup pairs connected through their rarer
-    shingles. One aggregate + one anti join (AQE broadcasts the hot set
-    when it is small, the common case)."""
-    hot = (
-        sh.groupBy(shingle_col)
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") > max_df)
-        .select(shingle_col)
-    )
-    return sh.join(hot, shingle_col, "left_anti")
+    shingles. It is ``skew.cap_group_width`` on the shingle key."""
+    return cap_group_width(sh, shingle_col, max_df)
 
 
 def ngram_jaccard_pairs(
@@ -310,9 +304,12 @@ def ngram_jaccard_pairs(
 
     ``shingle_table`` lets a caller that already exploded (and usually
     cached) the (id, shingle) table share it instead of paying the
-    tokenize+explode again — the ``minhash_signatures_from_shingles``
-    pattern; the LSH recall audit shares one table between its
-    candidate generator and this exact ground truth."""
+    tokenize+explode again; the LSH recall audit shares one table
+    between its candidate generator and this exact ground truth.
+
+    The verify is this shingle self-join's own count, not
+    ``jaccard_verify``: here the join IS the candidate generator and
+    already yields ``common``, so packing the sets would add a pass."""
     sh = (
         shingle_table
         if shingle_table is not None
@@ -396,57 +393,18 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, i, h): MinHash signature rows — h_i = min over shingles of the
-    universal hash ((2i+1)·x + 11i+7) mod p, x = 60-bit shingle hash mod p.
-
-    One explode + one groupBy(id, i): the signature of a 100 TB corpus is
-    a single shuffle of (doc, i) keys. Deterministic coefficients make the
-    signature reproducible anywhere (incl. the DuckDB oracle).
-    """
-    return minhash_signatures_from_shingles(
-        _shingle_table(df, id_col, text_col, shingle_n), id_col, num_hashes
-    )
-
-
-def minhash_signatures_from_shingles(
+def minhash_wide_signatures(
     shingle_table: DataFrame, id_col: str = "doc_id", num_hashes: int = 32
 ) -> DataFrame:
-    """Signature from a pre-built (id, shingle) table — lets callers share
-    one shingle explode between signatures and verification.
+    """(id, h0..h{k-1}): the MinHash signature of each document, h_i =
+    min over its shingles of the universal hash ((2i+1)·x + 11i+7) mod p,
+    x = 60-bit shingle hash mod p. Deterministic coefficients make the
+    signature reproducible anywhere (incl. the DuckDB oracle).
 
     The k hash functions are k min-aggregate EXPRESSIONS over one groupBy
     (map-side partial aggregation), not a k-way row explode: for a corpus
     with S shingle rows this aggregates S rows once instead of shuffling
-    k·S rows. Output stays narrow (id, i, h) for banding.
-    """
-    sh = shingle_table.withColumn("x", md5_hash60(F.col("shingle")) % MERSENNE_P)
-    aggs = [
-        F.min(
-            ((F.lit(2 * i + 1)) * F.col("x") + F.lit(11 * i + 7)) % MERSENNE_P
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    wide = sh.groupBy(id_col).agg(*aggs)
-    stack = "stack({n}, {args}) as (i, h)".format(
-        n=num_hashes, args=", ".join(f"{i}, h{i}" for i in range(num_hashes))
-    )
-    return wide.selectExpr(id_col, stack)
-
-
-def minhash_wide_signatures(
-    shingle_table: DataFrame, id_col: str = "doc_id", num_hashes: int = 32
-) -> DataFrame:
-    """Wide signature frame (id, h0..h{k-1}) — the k min-aggregates of
-    ``minhash_signatures_from_shingles`` BEFORE the stack to narrow form.
-    Banding can consume this directly (see ``lsh_candidate_pairs_wide``),
-    skipping the narrow explode + re-group entirely."""
+    k·S rows, and ``_band_frame`` bands the wide row in the same stage."""
     sh = shingle_table.withColumn("x", md5_hash60(F.col("shingle")) % MERSENNE_P)
     aggs = [
         F.min(
@@ -484,6 +442,92 @@ def _band_frame(
     )
 
 
+def bucket_pairs(
+    banded: DataFrame,
+    id_col: str = "doc_id",
+    key_col: str = "sig",
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Id-ordered pairs (a < b) sharing a (band, key) bucket: the LSH
+    OR-construction's candidate join. It is an EQUI-join on (band, key),
+    so pairwise work is quadratic only within a bucket, never across the
+    corpus. A pair sharing k buckets appears k times; each caller dedups
+    where it needs to. Each ``carry`` column rides along from both sides
+    as ``<col>_a`` / ``<col>_b``."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).select(
+        F.col(f"a.{id_col}").alias(a_col),
+        F.col(f"b.{id_col}").alias(b_col),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
+def jaccard_verify(
+    cands: DataFrame,
+    items: DataFrame,
+    id_col: str = "doc_id",
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    item_col: str = "shingle",
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs on PACKED sets: ``items`` holds
+    one row per distinct (id, item); each id's items are packed into one
+    array row, each candidate joins its two arrays, and
+    ``common = |a ∩ b|``, ``jaccard = common / (n_a + n_b − common)``.
+    The operands are the integers a per-item join-and-count gives, so
+    the int/int ratio is bit-identical to it. ``common > 0`` keeps that
+    join's semantics: a pair sharing no item is never returned (a doc
+    with no items has no set and drops out). The candidate columns come
+    back with ``common``, ``n_a``, ``n_b`` and ``jaccard``; thresholds
+    are the caller's."""
+    packed = items.groupBy(id_col).agg(F.collect_list(item_col).alias("__set"))
+
+    def side(col: str, arr: str) -> DataFrame:
+        return packed.select(F.col(id_col).alias(col), F.col("__set").alias(arr))
+
+    common = F.col("common")
+    return (
+        cands.join(side(a_col, "__a"), a_col)
+        .join(side(b_col, "__b"), b_col)
+        .withColumn("common", F.size(F.array_intersect("__a", "__b")))
+        .withColumn("n_a", F.size("__a"))
+        .withColumn("n_b", F.size("__b"))
+        .drop("__a", "__b")
+        .filter(common > 0)
+        .withColumn("jaccard", common / (F.col("n_a") + F.col("n_b") - common))
+    )
+
+
+def _lsh_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    max_shingle_df: int | None,
+    shingle_table: DataFrame | None = None,
+) -> DataFrame:
+    """The (id, shingle) universe a MinHash pipeline signs AND verifies:
+    hot shingles dropped when capped, cached unless the caller passed an
+    already-materialized table that needs no cap."""
+    if shingle_table is not None and max_shingle_df is None:
+        return shingle_table
+    sh = (
+        shingle_table
+        if shingle_table is not None
+        else _shingle_table(df, id_col, text_col, shingle_n)
+    )
+    if max_shingle_df is not None:
+        sh = drop_hot_shingles(sh, max_shingle_df)
+    return note_query_cache(sh.cache())
+
+
 def cross_minhash_near_dup(
     df: DataFrame,
     is_new: Column,
@@ -504,14 +548,11 @@ def cross_minhash_near_dup(
     precomputed and stored in a real deployment; here they share one
     signature pass with the batch for the oracle's benefit).
 
-    Verification is exact Jaccard over the shared shingle table,
+    Verification is ``jaccard_verify`` over the shared shingle table,
     candidates only. Returns (new_doc, corpus_doc, jaccard ≥ threshold).
     """
     flags = df.select(F.col(id_col), is_new.alias("__new"))
-    sh = _shingle_table(df, id_col, text_col, shingle_n)
-    if max_shingle_df is not None:
-        sh = drop_hot_shingles(sh, max_shingle_df)
-    sh = note_query_cache(sh.cache())
+    sh = _lsh_shingles(df, id_col, text_col, shingle_n, max_shingle_df)
     banded = _band_frame(
         minhash_wide_signatures(sh, id_col, num_hashes),
         id_col,
@@ -529,33 +570,8 @@ def cross_minhash_near_dup(
         .select("new_doc", "corpus_doc")
         .distinct()
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        cands.join(
-            sh.select(F.col(id_col).alias("new_doc"), "shingle"), "new_doc"
-        )
-        .join(
-            sh.select(F.col(id_col).alias("corpus_doc"), "shingle"),
-            ["corpus_doc", "shingle"],
-        )
-        .groupBy("new_doc", "corpus_doc")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
     return (
-        common.join(
-            sizes.select(F.col(id_col).alias("new_doc"), F.col("n_sh").alias("n_a")),
-            "new_doc",
-        )
-        .join(
-            sizes.select(
-                F.col(id_col).alias("corpus_doc"), F.col("n_sh").alias("n_b")
-            ),
-            "corpus_doc",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
+        jaccard_verify(cands, sh, id_col, "new_doc", "corpus_doc")
         .filter(F.col("jaccard") >= threshold)
         .select("new_doc", "corpus_doc", "jaccard")
     )
@@ -567,69 +583,16 @@ def lsh_candidate_pairs_wide(
     num_hashes: int = 32,
     rows_per_band: int = 2,
 ) -> DataFrame:
-    """Banding as a PROJECTION over the wide signature frame: each band's
+    """Distinct (doc_a, doc_b) LSH candidates from the wide signature
+    frame: ``_band_frame`` bands it as a PROJECTION (each band's
     signature string concatenates its r hash columns in-row, then one
-    explode fans out (id, band, sig) — no second aggregation. The narrow
-    (id, i, h) path re-groups by (id, band) with collect_list +
-    array_sort; that groupBy reuses the id hash-partitioning (no extra
-    shuffle — Catalyst knows hash(id) clusters (id, band)), but still
-    pays an ObjectHashAggregate materializing and sorting k structs per
-    doc. Here banding is codegen'd string concat in the same stage as
-    the signature agg. Band sig strings are identical to the narrow
-    path's (same order, same separator), so candidates are
-    bit-identical."""
-    banded = _band_frame(wide, id_col, num_hashes, rows_per_band)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .dropDuplicates()
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str = "doc_id", rows_per_band: int = 2
-) -> DataFrame:
-    """Band the signature and bucket-join: pairs agreeing on ALL rows of
-    any band become candidates. P(candidate) = 1-(1-J^r)^b — r=2, b=16
-    catches J≥0.3 with >80% probability while keeping buckets selective."""
-    banded = (
-        signatures.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.concat_ws(
-                "-",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("i"), F.col("h")))
-                    ),
-                    lambda s: s["h"].cast("string"),
-                ),
-            ).alias("sig")
-        )
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .dropDuplicates()
-    )
+    explode fans out (id, band, sig) — codegen'd in the same stage as
+    the signature agg, no second aggregation), then ``bucket_pairs``.
+    P(candidate) = 1-(1-J^r)^b — r=2, b=16 catches J≥0.3 with >80%
+    probability while keeping buckets selective."""
+    return bucket_pairs(
+        _band_frame(wide, id_col, num_hashes, rows_per_band), id_col
+    ).dropDuplicates()
 
 
 def minhash_near_dup_pairs(
@@ -649,87 +612,30 @@ def minhash_near_dup_pairs(
 
     ``max_shingle_df`` (default None = off) drops corpus-hot shingles
     from the shared shingle table before BOTH the signature aggregate
-    and the candidate-verify joins — signatures and verification see the
-    same filtered universe, and the verify stage's per-shingle bucket
-    width is bounded (see ``drop_hot_shingles``).
+    and the candidate verify — signatures and verification see the
+    same filtered universe (see ``drop_hot_shingles``).
 
     ``shingle_table`` lets a caller that already exploded (and pinned /
     cached) the (id, shingle) table share it instead of paying the
     tokenize+explode again — the query layer shares ONE pinned shingle
     table per (session, corpus) across this pipeline and the LSH
     recall audit. An already-materialized table is not re-cached."""
-    if shingle_table is not None:
-        sh = shingle_table
-        if max_shingle_df is not None:
-            sh = note_query_cache(drop_hot_shingles(sh, max_shingle_df).cache())
-    else:
-        sh = _shingle_table(df, id_col, text_col, shingle_n)
-        if max_shingle_df is not None:
-            sh = drop_hot_shingles(sh, max_shingle_df)
-        sh = note_query_cache(sh.cache())
-    # per-doc shingle counts ride the SAME hash aggregate as the
-    # signatures (one count beside the k min-hashes) instead of a
-    # separate groupBy over sh: one fewer shuffle stage to compile and
-    # run, and one fewer consumer racing to fill the sh cache. Counts
-    # are over the identical (possibly hot-filtered) shingle universe
-    # the signatures see, so verify semantics are unchanged.
-    x = md5_hash60(F.col("shingle")) % MERSENNE_P
-    # doc-sized; feeds banding + both verify size joins. Tracked via
-    # note_query_cache so the invoking query's cache generation owns it
-    # (ADVICE r8 #3 — an unowned .cache() is a session-lifetime leak).
-    wide = note_query_cache(
-        sh.withColumn("x", x)
-        .groupBy(id_col)
-        .agg(
-            *[
-                F.min(
-                    ((F.lit(2 * i + 1)) * F.col("x") + F.lit(11 * i + 7))
-                    % MERSENNE_P
-                ).alias(f"h{i}")
-                for i in range(num_hashes)
-            ],
-            F.count(F.lit(1)).alias("n_sh"),
-        )
-        .cache()
+    sh = _lsh_shingles(
+        df, id_col, text_col, shingle_n, max_shingle_df, shingle_table
     )
     cands = lsh_candidate_pairs_wide(
-        wide,
+        minhash_wide_signatures(sh, id_col, num_hashes),
         id_col,
         num_hashes,
         rows_per_band,
     )
-    # exact-Jaccard verification restricted to CANDIDATE pairs only — the
-    # whole point of LSH is that the quadratic stage never touches
-    # non-candidates (an all-pairs verify would defeat it at scale)
-    sizes = wide.select(id_col, "n_sh")
-    sh_a = cands.join(
-        sh.select(F.col(id_col).alias("doc_a"), "shingle"), "doc_a"
-    )
-    common = (
-        sh_a.join(
-            sh.select(F.col(id_col).alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    out = (
-        common.join(
-            sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")),
-        )
+    # the quadratic stage touches CANDIDATE pairs only — an all-pairs
+    # verify would defeat LSH at scale
+    return (
+        jaccard_verify(cands, sh, id_col)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return out
 
 
 SIMHASH_BITS = 60  # usable bits of the md5-derived hash; top 4 stay zero
@@ -984,10 +890,10 @@ def simhash_near_dup_pairs(
     max_hamming: int = 8,
     band_bits: int = 15,
 ) -> DataFrame:
-    """SimHash near-dup: bucket by 4 contiguous bit-bands (any pair within
-    Hamming ≤ 3 of each other shares at least one identical band by
-    pigeonhole; wider distances are caught probabilistically), then verify
-    Hamming distance within buckets only."""
+    """SimHash near-dup: ``sig64_band_pairs`` over the 60-bit SimHash
+    signatures, 4 bit-bands — any pair within Hamming ≤ 3 shares a band
+    by pigeonhole; wider distances are caught probabilistically.
+    Returns (doc_a, doc_b, hamming)."""
     # cache: the bucket self-join would otherwise evaluate the signature
     # UDF on BOTH sides (twice over the full corpus — the expensive stage;
     # the cached frame is just (id, int64), tiny relative to the text).
@@ -998,41 +904,9 @@ def simhash_near_dup_pairs(
         .select(F.col(id_col), simhash64(text_col).alias("sig"))
         .cache()
     )
-    bands = sigs.select(
-        id_col,
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.shiftright(F.col("sig"), b * band_bits)
-                            % F.lit(1 << band_bits)
-                        ).alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "sig", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            hamming64(F.col("a.sig"), F.col("b.sig")).alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return sig64_band_pairs(
+        sigs, id_col, "sig", max_hamming, band_bits, n_bands=4
+    ).withColumnsRenamed({"id_a": "doc_a", "id_b": "doc_b"})
 
 
 def char_gram_table(
@@ -1122,8 +996,9 @@ def sig64_band_pairs(
     aHash/pHash, audio chromaprint chunks …): pigeonhole-bucket by
     ``n_bands`` contiguous bit bands — a pair within Hamming ≤ n_bands-1
     of each other shares at least one identical band — then verify exact
-    Hamming inside buckets only. The generic form of the SimHash text
-    path above, shifted UNSIGNED so sign-bit signatures band correctly.
+    Hamming inside buckets only. Bands are shifted UNSIGNED so sign-bit
+    signatures band correctly; the SimHash text path above runs this
+    over its non-negative 60-bit signatures.
 
     RECALL CONTRACT: complete only for ``max_hamming ≤ n_bands - 1``
     (the default). A larger threshold is allowed but probabilistic —
@@ -1132,8 +1007,8 @@ def sig64_band_pairs(
     callers wanting guaranteed recall at distance d must raise
     ``n_bands`` to at least d+1.
 
-    Scale shape: explode ×n_bands, one (band, key) equi-join, popcount
-    verify — never a theta join."""
+    Scale shape: explode ×n_bands, one ``bucket_pairs`` (band, key)
+    equi-join, popcount verify — never a theta join."""
     bands = sigs.select(
         id_col,
         F.col(sig_col).alias("__sig"),
@@ -1154,19 +1029,12 @@ def sig64_band_pairs(
     ).select(
         id_col, "__sig", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        bucket_pairs(bands, id_col, "key", "id_a", "id_b", carry=("__sig",))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming64(F.col("a.__sig"), F.col("b.__sig")).alias("hamming"),
+            "id_a",
+            "id_b",
+            hamming64(F.col("__sig_a"), F.col("__sig_b")).alias("hamming"),
         )
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)

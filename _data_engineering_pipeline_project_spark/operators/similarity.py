@@ -28,6 +28,8 @@ from _data_engineering_pipeline_project_spark.functions.vectors import (
     dot_unrolled,
     l2_norm,
 )
+from _data_engineering_pipeline_project_spark.operators.dedup import bucket_pairs
+from _data_engineering_pipeline_project_spark.operators.skew import cap_group_width
 
 
 def topk_cosine_bruteforce(
@@ -258,7 +260,8 @@ def lsh_dup_pairs(
     planes_per_band ≈ log2(n / target_bucket_width); ``max_bucket_width``
     is the hard backstop against residual skew (degenerate vectors that
     pile into one sign pattern): buckets wider than the cap are DROPPED
-    before the self-join — the ``drop_hot_shingles`` move. Unlike hot
+    before the self-join (``skew.cap_group_width``, the
+    ``drop_hot_shingles`` move). Unlike hot
     shingles, a wide LSH bucket can hold true pairs, so the cap trades
     bounded work for recall on the skewed slice; pairs whose vectors
     also share a non-capped band are still found (OR-construction)."""
@@ -269,29 +272,9 @@ def lsh_dup_pairs(
         ).alias("band", "bucket"),
     ).cache()  # both self-join sides read it — bucket UDF runs ONCE
     if max_bucket_width is not None:
-        wide = (
-            b.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__w"))
-            .filter(F.col("__w") > max_bucket_width)
-            .select("band", "bucket")
-        )
-        # anti join, not a width column + filter: the wide set is
-        # tiny (AQE broadcasts it) and the cached explode is reused
-        b = b.join(wide, ["band", "bucket"], "left_anti")
-    cand = (
-        b.alias("a")
-        .join(
-            b.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
-        )
-        .distinct()  # a pair sharing k bands is verified ONCE
-    )
+        b = cap_group_width(b, ["band", "bucket"], max_bucket_width)
+    # a pair sharing k bands is verified ONCE
+    cand = bucket_pairs(b, id_col, "bucket", "vec_a", "vec_b").distinct()
     # norms evaluated once per vector in the projections BELOW the join
     # (sqrt(dot(v,v)) is the same double inline or precomputed, so the
     # oracle is unchanged); the per-candidate work is one dot + a divide
@@ -937,7 +920,6 @@ def pq_index_shared(
     executor loss (localCheckpoint blocks do not) — it IS
     ``save_pq_index``'s production form, kept in a session tempdir."""
     import shutil
-    import tempfile
 
     spark = corpus.sparkSession
 
@@ -963,7 +945,7 @@ def pq_index_shared(
         )
 
     def build() -> tuple:
-        tmpdir = tempfile.mkdtemp(prefix="pq_index_")
+        tmpdir = memo.scratch_dir("pq_index_")
         cb0 = pq_codebooks(corpus, m, sub_dim, ksub, id_col, vec_col)
         cb0.write.mode("overwrite").parquet(f"{tmpdir}/codebooks")
         cb = spark.read.schema(cb0.schema).parquet(f"{tmpdir}/codebooks")

@@ -203,28 +203,40 @@ def bucketed_table(spark: SparkSession, name: str) -> DataFrame:
     return spark.table(name)
 
 
+def wide_groups(
+    df: DataFrame, group_cols: str | list[str], max_width: int
+) -> DataFrame:
+    """The keys of ``df`` whose group holds more than ``max_width``
+    rows: one hash aggregate (map-side partial counts). The relation
+    ``cap_group_width`` anti-joins against — and the one a maintained
+    index persists as its frozen drop-list."""
+    return (
+        df.groupBy(group_cols)
+        .agg(F.count(F.lit(1)).alias("__w"))
+        .filter(F.col("__w") > max_width)
+        .select(group_cols)
+    )
+
+
 def cap_group_width(
-    df: DataFrame, group_col: str, max_width: int
+    df: DataFrame, group_cols: str | list[str], max_width: int
 ) -> DataFrame:
     """Drop every row of groups wider than ``max_width`` — the
     hyper-active-key guard for pair-expansion self-joins (item-item
-    cosine, co-occurrence, market basket): one customer with a 10^5-item
-    basket contributes 10^10 pairs, and no downstream aggregate recovers
-    that cost. Same DF-cap discipline as the hot-shingle filter
-    (operators/dedup.py:cap_shingle_df); the width census is one hash
-    aggregate, the cap an anti-join against the (tiny) hot-key set.
+    cosine, co-occurrence, market basket, LSH buckets): one customer
+    with a 10^5-item basket contributes 10^10 pairs, and no downstream
+    aggregate recovers that cost. The hot-shingle filter
+    (operators/dedup.py:drop_hot_shingles) is this cap on the shingle
+    key. The width census is ``wide_groups``, the cap an anti-join
+    against it whose strategy AQE picks: the hot set is usually tiny
+    and broadcasts itself, but a forced hint would pin a large one
+    (aggressive caps on web-scale data) to the driver.
 
     Dropping (rather than sampling) the hot groups is the documented
     contract: hyper-active keys are bots/aggregators whose co-occurrence
     signal is noise; keep them by salting the AGGREGATE instead if the
     analysis needs them."""
-    hot = (
-        df.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("__w"))
-        .filter(F.col("__w") > max_width)
-        .select(group_col)
-    )
-    return df.join(F.broadcast(hot), group_col, "left_anti")
+    return df.join(wide_groups(df, group_cols, max_width), group_cols, "left_anti")
 
 
 def explode_ordered_pairs(

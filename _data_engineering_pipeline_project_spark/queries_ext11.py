@@ -270,8 +270,6 @@ def _ivfopq_maintained(spark: SparkSession, sf: str):
     scale the index is simply bootstrapped over the given corpus —
     WHAT is served is identical either way (pinned: N ticks == one-
     shot, bit-for-bit, tests/test_round12.py)."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.streaming.ivfopqmaint import (
         IvfOpqIndexMaintainer,
     )
@@ -279,7 +277,7 @@ def _ivfopq_maintained(spark: SparkSession, sf: str):
     def build():
         mnt = IvfOpqIndexMaintainer(
             spark,
-            tempfile.mkdtemp(prefix="ivfopq_index_"),
+            memo.scratch_dir("ivfopq_index_"),
             num_centroids=_IVFOPQ_CENTROIDS,
         )
         # the allocated model is shared with embedding_topk_opq's memo —

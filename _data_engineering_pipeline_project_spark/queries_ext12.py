@@ -186,8 +186,6 @@ def _cc_maintained(spark: SparkSession, sf: str):
     maintainer's contract (N ticks == one-shot, bit-for-bit, pinned by
     test), which is exactly why the one-shot recursive-CTE oracle
     checks it."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.queries_ext import (
         _minhash_pairs_shared,
     )
@@ -198,7 +196,7 @@ def _cc_maintained(spark: SparkSession, sf: str):
     def build():
         # pinned: one execution per session
         pairs = _minhash_pairs_shared(spark, sf)
-        mnt = ClusterMaintainer(spark, tempfile.mkdtemp(prefix="cc_maint_"))
+        mnt = ClusterMaintainer(spark, memo.scratch_dir("cc_maint_"))
         bucket = F.pmod(
             F.crc32(F.col("doc_a").cast("string").cast("binary")), F.lit(3)
         )
@@ -257,8 +255,6 @@ def _ndm_maintained(spark: SparkSession, sf: str):
     Served pairs are split-independent by the maintainer's contract
     (pairs() == one-shot minhash_near_dup_pairs over the union,
     bit-for-bit, pinned by test), so the one-shot oracle checks them."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.streaming.neardupmaint import (
         NearDupIndexMaintainer,
     )
@@ -266,7 +262,7 @@ def _ndm_maintained(spark: SparkSession, sf: str):
     def build():
         docs = table(spark, sf, "documents").select("doc_id", "text")
         mnt = NearDupIndexMaintainer(
-            spark, tempfile.mkdtemp(prefix="ndm_index_")
+            spark, memo.scratch_dir("ndm_index_")
         )
         # two ingest slices: a tick has a FIXED scheduling overhead (~5 s
         # after the r13 lineage discipline — was ~18 s; tools/
@@ -323,8 +319,6 @@ def _panel_maintained(spark: SparkSession, sf: str):
     bottom-k is a monoid per stratum, so the served panel is
     split-independent (N ticks == one-shot, pinned by test) — the
     one-shot oracle checks it."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.queries_ext11 import (
         _BK_LANG_K,
     )
@@ -338,7 +332,7 @@ def _panel_maintained(spark: SparkSession, sf: str):
         )
         mnt = SampleMaintainer(
             spark,
-            tempfile.mkdtemp(prefix="panel_maint_"),
+            memo.scratch_dir("panel_maint_"),
             key_col="doc_id",
             k=_BK_LANG_K,
             group_col="lang",
@@ -454,8 +448,6 @@ def _sdd_maintained(spark: SparkSession, sf: str):
     oracle's seed CTE derives the identical centroid set), then two
     ingest slices ticked against them. Served pairs equal the one-shot
     under frozen centroids (pinned by test)."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.streaming.semdedupmaint import (
         SemDeDupMaintainer,
     )
@@ -464,7 +456,7 @@ def _sdd_maintained(spark: SparkSession, sf: str):
         emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
         mnt = SemDeDupMaintainer(
             spark,
-            tempfile.mkdtemp(prefix="sdd_index_"),
+            memo.scratch_dir("sdd_index_"),
             num_centroids=16,
             threshold=0.4,
             dim=64,

@@ -45,15 +45,13 @@ def _bm25_maintained(spark: SparkSession, sf: str):
     (postings append disjointly; df/stats are commutative monoids;
     N ticks == one-shot bit-for-bit, pinned by test), which is why the
     one-shot lexical oracle checks them."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.streaming.bm25maint import (
         Bm25Maintainer,
     )
 
     def build():
         docs = table(spark, sf, "documents").select("doc_id", "text")
-        mnt = Bm25Maintainer(spark, tempfile.mkdtemp(prefix="bm25_maint_"))
+        mnt = Bm25Maintainer(spark, memo.scratch_dir("bm25_maint_"))
         # coalesce(bucket, 0): a null doc_id must land in exactly one slice
         # (the one-shot oracle's corpus scalars count every row)
         bucket = F.coalesce(
@@ -228,8 +226,6 @@ def _rag_bm25_maintained(spark: SparkSession, sf: str):
     context-window chunks (pure per-doc function — chunking commutes
     with ingest slicing) ticked into a ``Bm25Maintainer`` keyed by
     cid. Same split-independence contract as the document index."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.operators import (
         curation as C,
     )
@@ -245,7 +241,7 @@ def _rag_bm25_maintained(spark: SparkSession, sf: str):
         )
         mnt = Bm25Maintainer(
             spark,
-            tempfile.mkdtemp(prefix="rag_bm25_maint_"),
+            memo.scratch_dir("rag_bm25_maint_"),
             id_col="cid",
             text_col="chunk",
         )
@@ -370,8 +366,6 @@ def _cov_maintained(spark: SparkSession, sf: str):
     the served relations are split-independent (N ticks == one-shot
     ``pca_fit(method='gram')``, bit-for-bit, pinned by test) — which
     is why the one-shot oracles check them verbatim."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.streaming.covmaint import (
         CovarianceMaintainer,
     )
@@ -379,7 +373,7 @@ def _cov_maintained(spark: SparkSession, sf: str):
     def build():
         emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
         mnt = CovarianceMaintainer(
-            spark, tempfile.mkdtemp(prefix="cov_maint_"), dim=64
+            spark, memo.scratch_dir("cov_maint_"), dim=64
         )
         bucket = F.coalesce(
             F.pmod(
@@ -472,8 +466,6 @@ def _drift_maintained(spark: SparkSession, sf: str):
     twin), slices 1-2 are the post-baseline ingest. Every quantity is
     an exact integer sum, so the served report is split-independent
     AND statically SQL-expressible."""
-    import tempfile
-
     from _data_engineering_pipeline_project_spark.operators import (
         sampling as S,
     )
@@ -483,7 +475,7 @@ def _drift_maintained(spark: SparkSession, sf: str):
 
     def build():
         emb = table(spark, sf, "embeddings").select("vec_id", "embedding")
-        mnt = DriftMaintainer(spark, tempfile.mkdtemp(prefix="drift_maint_"))
+        mnt = DriftMaintainer(spark, memo.scratch_dir("drift_maint_"))
         bucket = S.hash_bucket("vec_id", 3)
         mnt.merge_batch(emb.filter(bucket == 0), batch_id=0)
         mnt.mark_baseline()

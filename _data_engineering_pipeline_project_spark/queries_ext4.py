@@ -34,6 +34,7 @@ from _data_engineering_pipeline_project_spark.functions.twopass import (
 from _data_engineering_pipeline_project_spark.operators import expectations as E
 from _data_engineering_pipeline_project_spark.operators import skyline as SK
 from _data_engineering_pipeline_project_spark.operators import textstats as TS
+from _data_engineering_pipeline_project_spark.operators.dedup import jaccard_verify
 from _data_engineering_pipeline_project_spark.queries import query
 
 
@@ -1381,8 +1382,8 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     MinHash it never goes all-pairs: candidate volume is driven by
     RARE terms (a term shared by k prefixes creates k² candidate
     slots, and frequent terms are exactly the ones pushed OUT of
-    prefixes). The verify stage re-joins candidates to full token sets
-    and applies the integer-form threshold ``9·common ≥ 4·(|a|+|b|)``
+    prefixes). The verify stage (``jaccard_verify``) packs full token
+    sets and applies the integer-form threshold ``9·common ≥ 4·(|a|+|b|)``
     (⇔ J ≥ 0.8) — no float compare in the cut, one division at output.
     """
     d = table(spark, sf, "documents")
@@ -1415,29 +1416,10 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    ta = tk.select(F.col("doc_id").alias("id_a"), "term")
-    tb = tk.select(F.col("doc_id").alias("id_b"), "term")
-    inter = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "term"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sz.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sz.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(9 * F.col("common") >= 4 * (F.col("na") + F.col("nb")))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("common")),
-                6,
-            ).alias("jaccard"),
-        )
+        jaccard_verify(cand, tk, "doc_id", "id_a", "id_b", "term")
+        .filter(9 * F.col("common") >= 4 * (F.col("n_a") + F.col("n_b")))
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 

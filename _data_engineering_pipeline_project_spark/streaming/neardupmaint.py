@@ -10,18 +10,17 @@ production piece: the banded signature relation is the INDEX, written
 once per document and appended per batch, so a tick's work is bounded
 by the batch:
 
-1. shingle + sign + band the BATCH only (O(batch) — per-doc
-   deterministic, which is what makes the index append-only);
-2. candidates = within-batch band collisions ∪ batch-bands ⋈ STORED
+1. shingle + sign + band the BATCH only (``minhash_wide_signatures``
+   and ``_band_frame``, O(batch) — per-doc deterministic, which is
+   what makes the index append-only);
+2. candidates = within-batch ``bucket_pairs`` ∪ batch-bands ⋈ STORED
    bands (the stored side is scanned with the batch side broadcast —
    never recomputed, never reshuffled);
 3. exact-Jaccard verify on the candidate sliver: partner documents'
    texts are fetched from the append-only doc store (broadcast semi
-   lookup) and re-shingled — a per-doc pure function — then every
-   document's shingles are packed into ONE set row, each candidate
-   joins its two sets, and ``|a ∩ b| / (|a| + |b| − |a ∩ b|)`` is the
-   one-shot pipeline's int/int ratio, so verification is bit-identical
-   to it;
+   lookup) and re-shingled — a per-doc pure function — then
+   ``jaccard_verify``, the one-shot pipeline's own packed-set verify,
+   so verification is bit-identical to it;
 4. verified pairs append to the pairs relation and tick the embedded
    ``ClusterMaintainer`` (clustermaint.py), so duplicate-cluster labels
    stay current without any transitive-closure recompute.
@@ -43,11 +42,11 @@ batch would drop different shingles at different ticks and break
 replay determinism. So the maintained form FREEZES the hot-shingle
 drop-list at bootstrap (the frozen-quantizer discipline the OPQ/IVF
 maintainers use): ``bootstrap_hot_shingles(corpus)`` computes the
-drop-list once over the bootstrap corpus with ``drop_hot_shingles``'s
-exact counting, persists it as an artifact, and every tick anti-joins
-its batch (and partner re-shingles) against that frozen list — so
-capped maintained == capped one-shot with the same frozen list,
-bit-for-bit (pinned by test). At 100 TB this is the guard that keeps
+drop-list once over the bootstrap corpus with ``skew.wide_groups`` (the
+census ``drop_hot_shingles`` caps with), persists it as an artifact, and
+every tick anti-joins its batch (and partner re-shingles) against that
+frozen list — so capped maintained == capped one-shot with the same
+frozen list, bit-for-bit (pinned by test). At 100 TB this is the guard that keeps
 boilerplate shingles from turning band buckets quadratic; on corpus
 drift the list ages like any frozen quantizer — re-bootstrap into a
 fresh base_dir (the ``rebootstrap_decision`` loop). Uncapped
@@ -194,13 +193,16 @@ class NearDupIndexMaintainer(VersionedState):
         to every subsequent tick. Must run before the first ingest
         tick (a list frozen mid-stream would give early and late
         batches different shingle universes — the replay-determinism
-        break the per-batch cap has). Counting is ``drop_hot_shingles``'s
-        exact semantics (rows of the shingle relation per shingle >
-        max_shingle_df), so capped maintained == capped one-shot with
-        the same frozen list, bit-for-bit. Returns the frozen list's
+        break the per-batch cap has). The list is ``skew.wide_groups``,
+        the census ``drop_hot_shingles`` caps with (rows of the shingle
+        relation per shingle > max_shingle_df), so capped maintained ==
+        capped one-shot with the same frozen list, bit-for-bit. Returns the frozen list's
         size (driver-bounded: one count over the hot sliver)."""
         from _data_engineering_pipeline_project_spark.operators.dedup import (
             _shingle_table,
+        )
+        from _data_engineering_pipeline_project_spark.operators.skew import (
+            wide_groups,
         )
 
         if self.max_shingle_df is None:
@@ -234,12 +236,7 @@ class NearDupIndexMaintainer(VersionedState):
             self.text_col,
             self.shingle_n,
         )
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > self.max_shingle_df)
-            .select("shingle")
-        )
+        hot = wide_groups(sh, "shingle", self.max_shingle_df)
         hot.write.mode("overwrite").parquet(self._hot_dir())
         self._commit(hot_gen=1)
         self._schemas["hot"] = hot.schema
@@ -250,7 +247,7 @@ class NearDupIndexMaintainer(VersionedState):
     ) -> DataFrame:
         """Anti-join a shingle relation against the frozen drop-list;
         identity when uncapped. Join strategy is left to AQE (the
-        ``drop_hot_shingles`` rule): boilerplate lists are usually
+        ``cap_group_width`` rule): boilerplate lists are usually
         small and broadcast themselves, but a forced hint would pin an
         aggressively-capped web-scale list to the driver (review
         r13)."""
@@ -272,6 +269,8 @@ class NearDupIndexMaintainer(VersionedState):
         from _data_engineering_pipeline_project_spark.operators.dedup import (
             _band_frame,
             _shingle_table,
+            bucket_pairs,
+            jaccard_verify,
             minhash_wide_signatures,
         )
 
@@ -332,16 +331,7 @@ class NearDupIndexMaintainer(VersionedState):
             os.path.join(self.base_dir, f"bands_b{batch_id}")
         )
         # within-batch candidates (a < b, the one-shot orientation)
-        a, b = bands_b.alias("a"), bands_b.alias("b")
-        within = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{idc}") < F.col(f"b.{idc}")),
-        ).select(
-            F.col(f"a.{idc}").alias("doc_a"),
-            F.col(f"b.{idc}").alias("doc_b"),
-        )
+        within = bucket_pairs(bands_b, idc)
         # cross candidates: stored index scanned, batch side broadcast
         # (bands() reads only the POINTER's batch list — the dir just
         # written above is not committed yet, so it is not in scope)
@@ -382,45 +372,12 @@ class NearDupIndexMaintainer(VersionedState):
             )
         else:
             sh_all = sh_b
-        # exact-Jaccard verify on PACKED sets: one shingle-set row per
-        # document (the shingle rows are already distinct per doc —
-        # ``_shingles_of_tokens`` applies array_distinct — and capped),
-        # each candidate joins its two sets, and the intersection size
-        # gives the one-shot formula's int/int ratio bit-for-bit;
-        # ``common > 0`` keeps the one-shot's shared-shingle join
-        # semantics at any threshold.
-        packed = sh_all.groupBy(idc).agg(
-            F.collect_list("shingle").alias("__set")
-        )
-        common = F.size(F.array_intersect("__a", "__b"))
+        # exact-Jaccard verify on packed sets (the shingle rows are
+        # already distinct per doc — ``_shingles_of_tokens`` applies
+        # array_distinct — and capped): the one-shot pipeline's verify
         pairs_new = (
-            cands.join(
-                packed.select(
-                    F.col(idc).alias("doc_a"), F.col("__set").alias("__a")
-                ),
-                "doc_a",
-            )
-            .join(
-                packed.select(
-                    F.col(idc).alias("doc_b"), F.col("__set").alias("__b")
-                ),
-                "doc_b",
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                common.alias("common"),
-                (F.size("__a") + F.size("__b")).alias("n_ab"),
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                "common",
-                (F.col("common") / (F.col("n_ab") - F.col("common"))).alias(
-                    "jaccard"
-                ),
-            )
-            .filter((F.col("common") > 0) & (F.col("jaccard") >= self.threshold))
+            jaccard_verify(cands, sh_all, idc)
+            .filter(F.col("jaccard") >= self.threshold)
             .select("doc_a", "doc_b", "jaccard")
         )
         # docs/bands landed at their stage boundaries above; the pairs

@@ -378,12 +378,10 @@ def test_chunk_documents_edge_cases(spark):
 def test_lsh_wide_banding_equals_narrow_and_saves_a_shuffle(spark):
     from _data_engineering_pipeline_project_spark.operators.dedup import (
         _shingle_table,
-        lsh_candidate_pairs,
         lsh_candidate_pairs_wide,
-        minhash_signatures_from_shingles,
         minhash_wide_signatures,
     )
-    from _data_engineering_pipeline_project_spark.plans.audit import exchange_count
+    from _data_engineering_pipeline_project_spark.plans.audit import explain_str
 
     df = spark.createDataFrame(
         [
@@ -395,24 +393,71 @@ def test_lsh_wide_banding_equals_narrow_and_saves_a_shuffle(spark):
         "doc_id long, text string",
     )
     sh = _shingle_table(df, "doc_id", "text", 3)
-    narrow = lsh_candidate_pairs(
-        minhash_signatures_from_shingles(sh, "doc_id", 32), "doc_id", 2
-    )
-    wide_sig = minhash_wide_signatures(sh, "doc_id", 32)
-    wide = lsh_candidate_pairs_wide(wide_sig, "doc_id", 32, 2)
-    pairs = lambda d: sorted((r["doc_a"], r["doc_b"]) for r in d.collect())
-    assert pairs(wide) == pairs(narrow)
-    assert (1, 4) in pairs(wide)  # exact dup always a candidate
-    # same shuffle count (Catalyst already reuses hash(id) partitioning
-    # for the narrow path's (id, band) re-group) ...
-    assert exchange_count(wide) == exchange_count(narrow)
-    # ... but the wide path eliminates the collect_list/array_sort
-    # re-aggregation entirely: banding is codegen'd concat in the
-    # signature stage, no ObjectHashAggregate anywhere
-    from _data_engineering_pipeline_project_spark.plans.audit import explain_str
-
-    assert "ObjectHashAggregate" in explain_str(narrow)
+    wide = lsh_candidate_pairs_wide(minhash_wide_signatures(sh, "doc_id", 32))
+    pairs = sorted((r["doc_a"], r["doc_b"]) for r in wide.collect())
+    assert (1, 4) in pairs  # exact dup always a candidate
+    # banding is codegen'd concat in the signature stage: no
+    # collect_list/array_sort re-aggregation, no ObjectHashAggregate
     assert "ObjectHashAggregate" not in explain_str(wide)
+
+
+def test_cross_minhash_is_the_new_by_corpus_slice_of_one_shot(spark):
+    """One LSH kernel behind both paths: the incremental new×corpus
+    detector returns exactly the one-shot pipeline's pairs with one new
+    and one corpus side, reoriented to (new_doc, corpus_doc), with the
+    same Jaccard doubles."""
+    from _data_engineering_pipeline_project_spark.operators.dedup import (
+        _band_frame,
+        _shingle_table,
+        bucket_pairs,
+        minhash_wide_signatures,
+    )
+
+    far = "spark shuffles partitions across executors during wide joins"
+    rows = [
+        (1, BASE),
+        (2, NEAR),  # near dup of 1: collides in several bands
+        (3, FAR),
+        (4, BASE),  # exact dup of 1
+        (5, "too short"),  # fewer than n=3 tokens: no shingles
+        (6, far),
+        (7, far + " again"),
+        (8, NEAR + " indeed"),
+        (9, "too short"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    new = {2, 4, 7, 9}
+    is_new = F.col("doc_id").isin(*new)
+
+    sh = _shingle_table(df, "doc_id", "text", 3)
+    hits = bucket_pairs(
+        _band_frame(minhash_wide_signatures(sh, "doc_id", 32), "doc_id", 32, 2)
+    )
+    n_bands = {
+        (r["doc_a"], r["doc_b"]): r["count"]
+        for r in hits.groupBy("doc_a", "doc_b").count().collect()
+    }
+    assert n_bands[(1, 2)] > 1 and n_bands[(1, 4)] == 16
+    assert not any(5 in p or 9 in p for p in n_bands)
+
+    one_shot = D.minhash_near_dup_pairs(df, threshold=0.3).collect()
+    # the packed verify gives the shingle self-join count's doubles
+    exact = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in D.ngram_jaccard_pairs(df, threshold=0.3).collect()
+    }
+    assert {(a, b): j for a, b, j in map(tuple, one_shot)}.items() <= exact.items()
+    want = sorted(
+        (b, a, j) if b in new else (a, b, j)
+        for a, b, j in map(tuple, one_shot)
+        if (a in new) != (b in new)
+    )
+    got = sorted(
+        map(tuple, D.cross_minhash_near_dup(df, is_new, threshold=0.3).collect())
+    )
+    assert got == want
+    assert (4, 1, 1.0) in got and any(p[:2] == (2, 1) for p in got)
+    assert not any(5 in p[:2] or 9 in p[:2] for p in got)
 
 
 def test_int8_quantized_topk_recall(spark):

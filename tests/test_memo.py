@@ -8,6 +8,7 @@ import ast
 import os
 import pathlib
 import shutil
+import subprocess
 import sys
 import tempfile
 import threading
@@ -190,14 +191,77 @@ def test_stats_count_hits_misses_key_errors_and_evictions():
     }
 
 
+_CHILD = """
+import sys
+from pyspark.sql import SparkSession
+from _data_engineering_pipeline_project_spark.operators.similarity import (
+    pq_index_shared,
+)
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "1g")
+    .getOrCreate()
+)
+rows = [(i, [float((i * 7 + d) % 5) for d in range(4)]) for i in range(12)]
+corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+_cb, codes = pq_index_shared(corpus, 2, 2, 4, "vec_id", "embedding")
+print(codes.inputFiles()[0])
+sys.exit(0)  # no memo.clear(), no spark.stop()
+"""
+
+
+def test_memo_storage_is_gone_after_the_process_exits(tmp_path):
+    """A process that exits without ``memo.clear()`` leaves no
+    memo-owned dir in the temp dir."""
+    repo = PKG.parent
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        PYTHONPATH=os.pathsep.join(
+            p for p in (str(repo), os.environ.get("PYTHONPATH")) if p
+        ),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _CHILD],
+        env=env,
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    built = urlparse(out.stdout.strip().splitlines()[-1]).path
+    assert built.startswith(str(tmp_path))  # the build used TMPDIR
+    assert not os.path.exists(built)
+    left = [
+        str(p.relative_to(tmp_path))
+        for pat in ("*_index_*", "*_maint_*")
+        for p in tmp_path.rglob(pat)
+    ]
+    assert not left, left
+
+
 def test_no_module_keeps_its_own_memo():
     """Session-memo storage lives only in memo.py: no other module may
-    bind a module-level name ending in ``_MEMO`` or ``_CACHE``."""
+    bind a module-level name ending in ``_MEMO`` or ``_CACHE``, nor make
+    a temp dir with ``tempfile.mkdtemp`` (``memo.scratch_dir`` makes
+    them under the root that is removed at exit)."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         if path.name == "memo.py" and path.parent == PKG:
             continue
-        for node in ast.parse(path.read_text()).body:
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute) and node.attr == "mkdtemp"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and any(a.name == "mkdtemp" for a in node.names)
+            ):
+                offenders.append(f"{path.relative_to(PKG)}:{node.lineno}:mkdtemp")
+        for node in tree.body:
             if isinstance(node, ast.Assign):
                 targets = node.targets
             elif isinstance(node, ast.AnnAssign):

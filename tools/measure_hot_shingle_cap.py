@@ -48,27 +48,15 @@ def corpus(spark, n):
     )
 
 
-def band_candidates(spark, sh):
+def band_candidates(sh):
     from _data_engineering_pipeline_project_spark.operators.dedup import (
-        _band_frame,
+        lsh_candidate_pairs_wide,
         minhash_wide_signatures,
     )
 
-    bands = _band_frame(
+    return lsh_candidate_pairs_wide(
         minhash_wide_signatures(sh, "doc_id", 32), "doc_id", 32, 2
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select("a.doc_id", "b.doc_id")
-        .dropDuplicates()
-        .count()
-    )
+    ).count()
 
 
 def main() -> None:
@@ -87,12 +75,12 @@ def main() -> None:
     sh = _shingle_table(docs, "doc_id", "text", 3).persist()
 
     t0 = time.time()
-    uncapped = band_candidates(spark, sh)
+    uncapped = band_candidates(sh)
     t_un = time.time() - t0
 
     cap = 8
     t0 = time.time()
-    capped = band_candidates(spark, drop_hot_shingles(sh, cap))
+    capped = band_candidates(drop_hot_shingles(sh, cap))
     t_cap = time.time() - t0
     print(
         f"candidates n={N}: uncapped {uncapped} ({t_un:.1f}s) vs "
@@ -102,15 +90,15 @@ def main() -> None:
     )
 
     # capped maintained tick end-to-end (freeze, then one tick)
-    tmp = tempfile.mkdtemp(prefix="hotcap_")
-    mnt = NearDupIndexMaintainer(
-        spark, os.path.join(tmp, "index"), max_shingle_df=cap
-    )
-    n_hot = mnt.bootstrap_hot_shingles(docs)
-    t0 = time.time()
-    mnt.merge_batch(docs, batch_id=0)
-    t_tick = time.time() - t0
-    pairs = mnt.pairs().count()
+    with tempfile.TemporaryDirectory(prefix="hotcap_") as tmp:
+        mnt = NearDupIndexMaintainer(
+            spark, os.path.join(tmp, "index"), max_shingle_df=cap
+        )
+        n_hot = mnt.bootstrap_hot_shingles(docs)
+        t0 = time.time()
+        mnt.merge_batch(docs, batch_id=0)
+        t_tick = time.time() - t0
+        pairs = mnt.pairs().count()
     print(
         f"maintained capped: frozen_list {n_hot} shingles, "
         f"tick {t_tick:.1f}s, verified pairs {pairs}",
